@@ -39,7 +39,7 @@ from dataclasses import dataclass
 from datetime import datetime
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 # Classification outcomes, in the reference's branch order.
@@ -57,6 +57,8 @@ class MergeResult:
     changed: DataFrame | None = None  # ONLY the rows this batch wrote
     # (touched existing rows post-update + inserts) -- what an incremental
     # sink persists as a delta instead of rewriting the full snapshot
+    counters_row: Row | None = None  # `counters` collected, set by callers
+    # that collect it anyway (IncrementalTable.merge_batch, the pipeline)
 
 
 def _eq(a: Column, b: Column) -> Column:
@@ -294,6 +296,12 @@ def merge_scd(
         # so callers don't need a separate count job (the driver row-count
         # gate A7); strip before persisting
         F.coalesce(F.sum("_dup_n"), F.lit(0)).cast("long").alias("_batch_rows"),
+        # rows minted under fresh ids (insert + new_version): how much the
+        # target's live row count grows -- an incremental sink's manifest
+        # row count advances by it; strip before persisting
+        F.coalesce(
+            F.sum(F.col("action").isin(*insert_actions).cast("long")), F.lit(0)
+        ).alias("_new_rows"),
     )
 
     return MergeResult(

@@ -83,14 +83,15 @@ def extract_world_bank_data(spark: SparkSession, html: str, batch_id: str) -> Da
     column), trim, attach the page-footer last-modified date parsed from
     'This page was last edited on 1 July 2024, at ...'.
     """
-    raw = html_table.read_html_table(
+    tables, elements = html_table.parse_html(html)
+    raw = html_table.table_frame(
         spark,
-        html,
+        tables,
         table_index=2,
         columns=["bank_name", "market_cap_usd"],
         positions=[1, 2],
     )
-    lastmod = html_table.element_text(html, "footer-info-lastmod") or ""
+    lastmod = elements.get("footer-info-lastmod") or ""
     # P7 substring-split parse (ipynb:88-89) done driver-side on the scalar
     date_str = lastmod.split("on")[1].split(",")[0].strip() if "on" in lastmod else None
     return raw.select(
@@ -113,9 +114,9 @@ def extract_exchange_rates_data(spark: SparkSession, html: str, batch_id: str) -
     year = html_table.sniff_year(tables[0].headers)
     if year is None:
         raise ValueError("rates page: no 4-digit year column in header")
-    raw = html_table.read_html_table(
+    raw = html_table.table_frame(
         spark,
-        html,
+        tables,
         table_index=0,
         columns=["country", "currency", "exchange_rate"],
         positions=[0, 1, 2],
@@ -171,8 +172,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineResult:
             banks_res = banks_table.merge_batch(
                 spark, schemas.WORLD_BANK_DATA, banks_batch, **banks_kw
             )
-            banks_counters_row = banks_res.counters.collect()[0]
-            return banks_res, banks_counters_row, banks_table
+            return banks_res, banks_table
         banks_target = sinks.read_snapshot(spark, banks_path, schemas.WORLD_BANK_DATA)
         # materialize_actions: audit outputs must survive the snapshot swap
         # below -- their lazy plans would read the old snapshot files, which
@@ -195,9 +195,9 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineResult:
         banks_res.changed = banks_res.changed.localCheckpoint(eager=True)
         # _batch_rows rides along so the A7 row-count gate (ipynb:265-269)
         # is free
-        banks_counters_row = banks_res.counters.collect()[0]
+        banks_res.counters_row = banks_res.counters.collect()[0]
         new_banks = banks_res.target
-        if banks_counters_row["_batch_rows"] > 0:
+        if banks_res.counters_row["_batch_rows"] > 0:
             new_banks = deactivate_stale(new_banks, cfg.batch_id, now=now)
         sinks.write_snapshot(new_banks, banks_path, target_files=4)
         # re-root the returned target at the committed snapshot, not the
@@ -205,7 +205,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineResult:
         banks_res.target = sinks.read_snapshot(
             spark, banks_path, schemas.WORLD_BANK_DATA
         )
-        return banks_res, banks_counters_row, None
+        return banks_res, None
 
     # --- exchanges_rates: flat 3-way merge -----------------------------------
     def rates_leg():
@@ -256,13 +256,13 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineResult:
                 F.broadcast(upd_keys), ["country", "currency", "year"], "left_semi"
             )
             rates_target_new = keep.unionByName(reverted)
-        rates_counters_row = rates_res.counters.collect()[0]
         if not cfg.incremental:
+            rates_res.counters_row = rates_res.counters.collect()[0]
             sinks.write_snapshot(rates_target_new, rates_path, target_files=4)
             rates_res.target = sinks.read_snapshot(
                 spark, rates_path, schemas.EXCHANGES_RATES
             )
-        return rates_res, rates_counters_row, rates_table
+        return rates_res, rates_table
 
     # The two table legs share no state until the audit (separate target
     # dirs, separate counters, no session-conf mutation anywhere in the
@@ -277,24 +277,24 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineResult:
     log("Load", "merging world_bank_data")
     log("Load", "merging exchanges_rates")
     if os.environ.get("SPARK_GRAFT_PIPELINE_SERIAL") == "1":
-        banks_res, banks_counters_row, banks_table = banks_leg()
-        rates_res, rates_counters_row, rates_table = rates_leg()
+        banks_res, banks_table = banks_leg()
+        rates_res, rates_table = rates_leg()
     else:
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=2) as pool:
             banks_fut = pool.submit(banks_leg)
             rates_fut = pool.submit(rates_leg)
-            banks_res, banks_counters_row, banks_table = banks_fut.result()
-            rates_res, rates_counters_row, rates_table = rates_fut.result()
+            banks_res, banks_table = banks_fut.result()
+            rates_res, rates_table = rates_fut.result()
 
     # --- audit: counters + summary + process_logs ----------------------------
     log("Audit", "writing counters and summary")
     counters = spark.createDataFrame(
         pd.DataFrame(
             [
-                tuple(banks_counters_row[c] for c in schemas.LOG_COUNTS.fieldNames()),
-                tuple(rates_counters_row[c] for c in schemas.LOG_COUNTS.fieldNames()),
+                tuple(res.counters_row[c] for c in schemas.LOG_COUNTS.fieldNames())
+                for res in (banks_res, rates_res)
             ],
             columns=schemas.LOG_COUNTS.fieldNames(),
         ),
@@ -304,8 +304,9 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineResult:
 
     summary_lines = []
     if cfg.incremental:
-        banks_total = banks_table.read(spark, schemas.WORLD_BANK_DATA).count()
-        rates_total = rates_table.read(spark, schemas.EXCHANGES_RATES).count()
+        # exact live row counts from the committed manifests: no Spark job
+        banks_total = banks_table.row_count(spark, schemas.WORLD_BANK_DATA)
+        rates_total = rates_table.row_count(spark, schemas.EXCHANGES_RATES)
     else:
         # audit totals from the COMMITTED snapshot's parquet footers
         # (r16): same committed files the former
@@ -314,8 +315,8 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineResult:
         # per run -- the audit-reads-committed-state contract holds
         banks_total = sinks.snapshot_row_count(banks_path)
         rates_total = sinks.snapshot_row_count(rates_path)
-    for row, total in ((banks_counters_row, banks_total), (rates_counters_row, rates_total)):
-        lines = summarize(row.asDict(), total)
+    for res, total in ((banks_res, banks_total), (rates_res, rates_total)):
+        lines = summarize(res.counters_row.asDict(), total)
         summary_lines.extend(lines)
         for line in lines:
             log("Audit", line)

@@ -126,14 +126,27 @@ def read_html_table(
     positions: list[int] | None = None,
 ) -> DataFrame:
     """S2/S3 table scan: rows of table ``table_index`` as a string-typed
-    DataFrame.
+    DataFrame (``parse_html`` + ``table_frame``)."""
+    tables, _ = parse_html(html)
+    return table_frame(spark, tables, table_index, columns, positions)
+
+
+def table_frame(
+    spark: SparkSession,
+    tables: list[HtmlTable],
+    table_index: int = 0,
+    columns: list[str] | None = None,
+    positions: list[int] | None = None,
+) -> DataFrame:
+    """Rows of already-parsed table ``table_index`` as a string-typed
+    DataFrame, so a caller that also needs the page's headers or element
+    texts parses the page once.
 
     ``positions`` selects/reorders cells per row (the reference keeps
     td[1], td[2] for banks -- dropping the rank column -- and td[0..2] for
     rates, ipynb:92-98,155-162); rows lacking those positions are skipped,
     mirroring the non-data-row filter (P3).
     """
-    tables, _ = parse_html(html)
     if table_index >= len(tables):
         raise ValueError(f"page has {len(tables)} tables; index {table_index} out of range")
     t = tables[table_index]

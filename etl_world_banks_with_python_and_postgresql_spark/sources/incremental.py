@@ -9,7 +9,8 @@ delta-log layout every transactional table format (Delta Lake, Iceberg,
 Hudi's COW/MOR split) converges on:
 
     table/
-      _manifest.json     {"seq": N, "base": "base-<k>", "deltas": [...]}
+      _manifest.json     {"seq": N, "base": "base-<k>", "deltas": [...],
+                          "max_id": <id high-water mark>, "rows": <live rows>}
       base-<k>/          compacted parquet snapshot (bulk of the data)
       delta-<seq>/       parquet: ONLY the rows batch <seq> wrote
 
@@ -22,6 +23,15 @@ Hudi's COW/MOR split) converges on:
   LEFT ANTI against the small union of delta ids) UNION the latest delta
   row per id (window over delta rows only -- bounded by batches *
   batch size, not by |target|).
+* **Metadata answers the bookkeeping reads**: the plain layout scans with
+  the declared schema pinned (no schema-inference job per file set);
+  ``write_delta`` takes the new delta's max id from its parquet footers;
+  and the manifest's ``rows`` keeps the exact live row count (a merge
+  adds its new-id rows, compaction carries it over), so ``row_count``
+  submits no Spark job. ``rows`` is ``None`` when unknown -- after a
+  ``delete_keys``, a bare ``write_delta``, or on manifests that predate
+  it -- and ``row_count`` then counts the resolved read instead; the next
+  full compaction re-seeds it from the new base's footers.
 * **Compaction amortizes**: after `compact_after` deltas, the resolved
   state is rewritten as a new base and the delta list resets -- the
   O(|target|) cost is paid once per `compact_after` batches instead of
@@ -58,6 +68,7 @@ from pyspark.sql import functions as F
 
 from ..committer import Token, commit_json, load_json
 from ..operators import merge as merge_ops
+from . import sinks
 
 _MANIFEST = "_manifest.json"
 
@@ -134,7 +145,7 @@ class IncrementalTable:
         contract, enforced -- committer module docstring)."""
         m, tok = load_json(self._manifest_path())
         if m is None:
-            return {"seq": 0, "base": None, "deltas": []}, tok
+            return {"seq": 0, "base": None, "deltas": [], "rows": 0}, tok
         return m, tok
 
     def _load_manifest(self) -> dict:
@@ -191,6 +202,15 @@ class IncrementalTable:
             spark, schema, self._load_manifest(), partition_range=partition_range
         )
 
+    def row_count(self, spark: SparkSession, schema) -> int:
+        """Exact number of rows ``read`` returns. From the manifest's
+        ``rows`` when it is known (no Spark job); otherwise counted from
+        the resolved read."""
+        m = self._load_manifest()
+        if m.get("rows") is not None:
+            return m["rows"]
+        return self._resolve(spark, schema, m).count()
+
     def _table_name(self, seq: int) -> str:
         digest = hashlib.md5(os.path.abspath(self.path).encode()).hexdigest()[:10]
         return f"incr_{digest}_{seq:06d}"
@@ -229,16 +249,20 @@ class IncrementalTable:
         return st["min"] <= self._stat(hi) and st["max"] >= self._stat(lo)
 
     def _read_files(self, spark: SparkSession, schema, name: str) -> DataFrame:
-        """One file-set member. Partitioned layouts move the partition
-        column to the end and re-infer its type from directory names;
-        re-project to the declared schema so unions and callers see one
-        shape."""
-        df = spark.read.parquet(os.path.join(self.path, name))
+        """One file-set member. The plain layout pins the declared schema,
+        which spares the schema-inference job a bare parquet read submits.
+        ``evolve_schema`` infers: a delta may carry columns the declared
+        schema lacks. Partitioned layouts move the partition column to
+        the end and re-infer its type from directory names; re-project to
+        the declared schema so unions and callers see one shape."""
+        path = os.path.join(self.path, name)
         if self.partition_by:
-            df = df.select(
+            return spark.read.parquet(path).select(
                 *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
             )
-        return df
+        if self.evolve_schema:
+            return spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path)
 
     def _resolve(
         self, spark: SparkSession, schema, m: dict, partition_range: tuple | None = None
@@ -310,12 +334,22 @@ class IncrementalTable:
 
     # --- write ----------------------------------------------------------
 
-    def write_delta(self, changed: DataFrame, target_files: int = 4) -> None:
+    def write_delta(
+        self, changed: DataFrame, target_files: int = 4, new_rows: int | None = None
+    ) -> None:
         """Persist one batch's changed rows; O(|changed|), not O(|target|).
 
-        Also advances the manifest's ``max_id`` high-water mark from the
-        just-written delta (a scan of the small delta files only), so the
+        Also advances the manifest's ``max_id`` high-water mark, so the
         NEXT merge_batch can skip the full-target max-id pass entirely.
+        The plain layout takes the delta's max id from its parquet footers
+        (exact for integer ids, no Spark job); partitioned layouts, and
+        files without usable stats, aggregate over the small delta files,
+        which also yields a partitioned delta's pruning range.
+
+        ``new_rows`` is how many of ``changed``'s rows carry ids the table
+        has not seen (the rest rewrite live ids); it advances the
+        manifest's live row count. ``None`` (unknown) leaves the count
+        unknown until the next full compaction.
         """
         m, tok = self._load_manifest_state()
         seq = m["seq"] + 1
@@ -325,17 +359,22 @@ class IncrementalTable:
         if self.partition_by:
             writer = writer.partitionBy(self.partition_by)
         writer.parquet(path)
-        spark = changed.sparkSession
-        aggs = [F.coalesce(F.max(self.id_col), F.lit(0)).alias("m")]
-        if self.partition_by:
-            aggs += [
-                F.min(self.partition_by).alias("plo"),
-                F.max(self.partition_by).alias("phi"),
-            ]
-        stats = spark.read.parquet(path).agg(*aggs).collect()[0]
+        delta_max = None if self.partition_by else sinks.snapshot_column_max(path, self.id_col)
+        if delta_max is None:
+            aggs = [F.coalesce(F.max(self.id_col), F.lit(0)).alias("m")]
+            if self.partition_by:
+                aggs += [
+                    F.min(self.partition_by).alias("plo"),
+                    F.max(self.partition_by).alias("phi"),
+                ]
+            stats = changed.sparkSession.read.parquet(path).agg(*aggs).collect()[0]
+            delta_max = stats["m"]
         m["seq"] = seq
         m["deltas"].append(name)
-        m["max_id"] = max(m.get("max_id") or 0, int(stats["m"]))
+        m["max_id"] = max(m.get("max_id") or 0, int(delta_max))
+        m["rows"] = (
+            None if new_rows is None or m.get("rows") is None else m["rows"] + new_rows
+        )
         if self.partition_by:
             # one [min, max] per delta: the whole pruning index is O(deltas)
             # manifest entries -- no file listing at read time
@@ -382,6 +421,8 @@ class IncrementalTable:
         m["seq"] = seq
         m["deltas"].append(name)
         m.setdefault("delta_kinds", {})[name] = "delete"
+        # how many of the ids were live is unknown without a scan
+        m["rows"] = None
         if self.partition_by and self.partition_by in have:
             stats = spark.read.parquet(path).agg(
                 F.min(self.partition_by).alias("plo"),
@@ -441,6 +482,7 @@ class IncrementalTable:
             "base": new_base,
             "deltas": remaining,
             "max_id": m.get("max_id"),
+            "rows": m.get("rows"),
         }
         if remaining:
             kinds = m.get("delta_kinds", {})
@@ -451,7 +493,8 @@ class IncrementalTable:
                 commit["delta_kinds"] = kept_kinds
             if kept_stats:
                 commit["delta_stats"] = kept_stats
-        # compaction mints no new ids: the high-water mark carries over
+        # compaction mints no new ids and keeps the live row set: the
+        # high-water mark and the row count carry over
         if self.bucket_by:
             name = self._table_name(seq)
             bucket_cols = list(self.bucket_by)
@@ -485,6 +528,10 @@ class IncrementalTable:
             resolved.coalesce(target_files).write.mode("overwrite").parquet(
                 os.path.join(self.path, new_base)
             )
+        if commit["rows"] is None and not remaining:
+            # after a full fold the base IS the live state: seed the
+            # count from its footers
+            commit["rows"] = sinks.snapshot_row_count(os.path.join(self.path, new_base))
         self._commit_manifest(commit, expect=tok)
 
     def vacuum(self) -> None:
@@ -525,7 +572,10 @@ class IncrementalTable:
         """read -> merge_scd -> (deactivate) -> write ONLY the delta.
 
         Returns the MergeResult (counters/actions still reflect the full
-        reference semantics); auto-compacts past ``compact_after`` deltas.
+        reference semantics) with ``counters_row`` set -- the counters are
+        collected once here, for the row-count gate and the manifest row
+        count, and callers reuse that row instead of collecting again.
+        Auto-compacts past ``compact_after`` deltas.
         ``retain_history=True`` skips the post-compaction vacuum so
         `read_at` can reach versions older than the last compaction.
         ``broadcast_batch=False`` is the big-batch path: the classify and
@@ -581,17 +631,18 @@ class IncrementalTable:
                 self.n_buckets if self.bucket_by and not broadcast_batch else None
             ),
         )
-        actions = res.actions
-        counters = res.counters
+        counters_row = res.counters.collect()[0]
         changed = res.changed
         # A7 row-count gate (ipynb:265-269): an empty batch skips the
         # deactivation pass, same as the snapshot-swap pipeline path
-        if deactivate and scd and counters.collect()[0]["_batch_rows"] > 0:
+        if deactivate and scd and counters_row["_batch_rows"] > 0:
             # disjoint from `changed` (stale rows never carry this batch_id)
             changed = changed.unionByName(
                 merge_ops.deactivated_rows(res.target, batch_id, now=now)
             )
-        self.write_delta(changed)
+        # only inserted rows take fresh ids; every other changed row
+        # rewrites a live id, so the live row count grows by _new_rows
+        self.write_delta(changed, new_rows=counters_row["_new_rows"])
         if len(self._load_manifest()["deltas"]) >= self.compact_after:
             self.compact(spark, schema)
             if not retain_history:
@@ -600,9 +651,9 @@ class IncrementalTable:
         # (possibly compacted-away) pre-batch lineage
         return merge_ops.MergeResult(
             target=self.read(spark, schema),
-            actions=actions,
-            counters=counters,
-            changed=None,
+            actions=res.actions,
+            counters=res.counters,
+            counters_row=counters_row,
         )
 
 

@@ -43,9 +43,11 @@ def write_snapshot(df: DataFrame, path: str, target_files: int | None = None) ->
 
 
 def read_snapshot(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Read the snapshot, or an empty typed frame if it doesn't exist yet."""
+    """Read the snapshot with ``schema`` pinned (no schema-inference job;
+    a directory without data files reads as an empty typed frame), or an
+    empty typed frame if it doesn't exist yet."""
     if os.path.exists(path):
-        return spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path)
     return spark.createDataFrame([], schema)
 
 
@@ -57,15 +59,17 @@ def snapshot_row_count(path: str) -> int:
     ``spark.read.parquet(path).count()`` would (the audit
     reads-committed-state contract is unchanged -- only the executor
     pass over the data is gone; guide §5: the driver reads metadata,
-    not data). Missing dir counts 0 (pre-first-run)."""
+    not data). Hive-style ``<col>=<value>/`` subdirectories are walked;
+    names starting with ``_`` or ``.`` are skipped, as Spark's file
+    listing skips them. Missing dir counts 0 (pre-first-run)."""
     import pyarrow.parquet as pq
 
-    if not os.path.exists(path):
-        return 0
     total = 0
-    for name in sorted(os.listdir(path)):
-        if name.endswith(".parquet"):
-            total += pq.ParquetFile(os.path.join(path, name)).metadata.num_rows
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for name in files:
+            if name.endswith(".parquet") and not name.startswith(("_", ".")):
+                total += pq.ParquetFile(os.path.join(root, name)).metadata.num_rows
     return total
 
 

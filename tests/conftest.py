@@ -1,5 +1,7 @@
+import contextlib
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -21,6 +23,29 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs:`` runs the block under a fresh Spark job
+    group; on exit ``jobs`` holds the ids of the jobs the block submitted
+    from the calling thread (job groups are thread-local)."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def run():
+        group = f"test-jobs-{uuid.uuid4().hex}"
+        jobs: list[int] = []
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            yield jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            # the status store is fed by the asynchronous listener bus
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 # --- test tiers (VERDICT r15 #1) -------------------------------------------

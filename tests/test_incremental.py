@@ -863,3 +863,160 @@ def test_bloom_index_lookup_matches_full_scan_and_prunes(spark, tmp_path):
     empty = bloom_lookup(spark, path, "o_custkey", [])
     assert empty.count() == 0
     assert empty.schema == full.schema
+
+
+# --- reads answered from metadata: pinned schema, manifest row count --------
+
+D0 = datetime(2024, 7, 1, 10, 0, 0)
+# an inactive history row and an active fresh insert; the batch below
+# turns them into a new_version and a noop, and inserts Bank C
+SEED_BANKS = [
+    (1, "Bank A", 100.0, date(2024, 6, 30), "b0", D0, D0, False),
+    (2, "Bank B", 200.0, date(2024, 6, 30), "b0", D0, None, True),
+]
+NEW_VERSION_BATCH = ("b1", D1, [("Bank A", 150.0), ("Bank B", 200.0), ("Bank C", 300.0)])
+UPDATE_BATCH = ("b2", D2, [("Bank A", 175.0), ("Bank B", 250.0)])
+
+
+def _seeded(spark, table, schema, rows):
+    """Commit ``rows`` as the table's base; the full compaction seeds the
+    manifest row count from the base footers."""
+    table.write_delta(spark.createDataFrame(rows, schema))
+    table.compact(spark, schema)
+    return table
+
+
+def _merge(spark, table, batch):
+    batch_id, now, rows = batch
+    return table.merge_batch(
+        spark, schemas.WORLD_BANK_DATA, batch_df(spark, rows, batch_id),
+        batch_id=batch_id, now=now, **MERGE_KW,
+    )
+
+
+def _assert_row_count_exact(spark, table, schema, known=True):
+    """row_count equals the resolved read's count; ``known`` says whether
+    the manifest carries it (else row_count took the counting fallback)."""
+    assert (table._load_manifest().get("rows") is not None) == known
+    assert table.row_count(spark, schema) == table.read(spark, schema).count()
+
+
+def test_read_and_row_count_submit_no_spark_job(spark, spark_jobs, tmp_path):
+    """A base plus two pending deltas resolves from the declared schema and
+    the manifest alone: building the read and counting its rows submit no
+    Spark job (a bare parquet read runs a schema-inference job per file
+    set)."""
+    from pyspark.sql import types as T
+
+    sch = T.StructType(
+        [T.StructField("id", T.LongType(), False), T.StructField("v", T.StringType())]
+    )
+    table = _seeded(spark, IncrementalTable(str(tmp_path / "t"), id_col="id"), sch,
+                    [(1, "a"), (2, "b")])
+    table.write_delta(spark.createDataFrame([(2, "b2"), (3, "c")], sch), new_rows=1)
+    table.write_delta(spark.createDataFrame([(4, "d")], sch), new_rows=1)
+    m = table._load_manifest()
+    assert m["base"] and len(m["deltas"]) == 2 and m["max_id"] == 4
+    with spark_jobs() as jobs:
+        df = table.read(spark, sch)
+        n = table.row_count(spark, sch)
+    assert jobs == []
+    assert n == 4
+    # the same probe does see jobs when the block runs some
+    with spark_jobs() as jobs:
+        assert sorted(tuple(r) for r in df.collect()) == [
+            (1, "a"), (2, "b2"), (3, "c"), (4, "d")
+        ]
+    assert jobs
+
+
+def test_row_count_exact_through_merge_compact_delete(spark, tmp_path):
+    """The manifest row count stays exact across merges (insert,
+    new_version, update), a partial and a full compaction; delete_keys
+    makes it unknown (row_count falls back to counting) until the next
+    full compaction re-seeds it from the base footers."""
+    sch = schemas.WORLD_BANK_DATA
+    table = _seeded(spark, IncrementalTable(str(tmp_path / "t"), id_col="world_bank_id"),
+                    sch, SEED_BANKS)
+    _assert_row_count_exact(spark, table, sch)
+    res = _merge(spark, table, NEW_VERSION_BATCH)
+    assert sorted(r["action"] for r in res.actions.collect()) == [
+        "insert", "new_version", "noop"
+    ]
+    assert res.counters_row["_new_rows"] == 2
+    _merge(spark, table, UPDATE_BATCH)
+    _assert_row_count_exact(spark, table, sch)
+    table.compact(spark, sch, upto=1)
+    _assert_row_count_exact(spark, table, sch)
+    table.compact(spark, sch)
+    assert table._load_manifest()["rows"] == 4
+    table.delete_keys(spark, sch, spark.createDataFrame([(1,)], "world_bank_id long"))
+    _assert_row_count_exact(spark, table, sch, known=False)
+    table.compact(spark, sch)
+    assert table._load_manifest()["rows"] == 3
+    _assert_row_count_exact(spark, table, sch)
+
+
+def test_row_count_falls_back_on_manifest_without_rows(spark, tmp_path):
+    """Manifests written before the row count existed: row_count counts
+    the resolved read, merges keep the count unknown, and a full
+    compaction seeds it."""
+    from etl_world_banks_with_python_and_postgresql_spark.committer import (
+        commit_json,
+        load_json,
+    )
+
+    sch = schemas.WORLD_BANK_DATA
+    table = _seeded(spark, IncrementalTable(str(tmp_path / "t"), id_col="world_bank_id"),
+                    sch, SEED_BANKS)
+    m, tok = load_json(table._manifest_path())
+    del m["rows"]
+    commit_json(table._manifest_path(), m, expect=tok)
+    _assert_row_count_exact(spark, table, sch, known=False)
+    _merge(spark, table, NEW_VERSION_BATCH)
+    _assert_row_count_exact(spark, table, sch, known=False)
+    table.compact(spark, sch)
+    _assert_row_count_exact(spark, table, sch)
+
+
+def test_row_count_exact_partitioned_layout(spark, tmp_path):
+    """Partitioned layout: exact through a merge and compaction, and the
+    post-delete re-seed reads the footers under the Hive directories."""
+    sch = schemas.EXCHANGES_RATES
+    table = IncrementalTable(
+        str(tmp_path / "t"), id_col="exchange_rate_id", partition_by="year"
+    )
+    _seeded(spark, table, sch, [
+        (1, "US", "USD", 1.0, Y21, "b0", D0, None),
+        (2, "FR", "EUR", 0.9, Y22, "b0", D0, None),
+    ])
+    table.merge_batch(
+        spark, sch,
+        rates_batch(spark, [("US", "USD", 1.1, Y21), ("JP", "JPY", 150.0, Y23)], "b1"),
+        batch_id="b1", now=D1, **RATES_KW,
+    )
+    _assert_row_count_exact(spark, table, sch)
+    table.delete_keys(
+        spark, sch, spark.createDataFrame([(2, Y22)], "exchange_rate_id long, year date")
+    )
+    _assert_row_count_exact(spark, table, sch, known=False)
+    table.compact(spark, sch)
+    assert table._load_manifest()["rows"] == 2
+    _assert_row_count_exact(spark, table, sch)
+
+
+def test_row_count_exact_bucketed_layout(spark, tmp_path):
+    """Bucketed base: exact through a merge, and the post-delete re-seed
+    reads the bucket files' footers."""
+    sch = schemas.WORLD_BANK_DATA
+    table = IncrementalTable(
+        str(tmp_path / "t"), id_col="world_bank_id", bucket_by=["bank_name"], n_buckets=4,
+    )
+    _seeded(spark, table, sch, SEED_BANKS)
+    _merge(spark, table, NEW_VERSION_BATCH)
+    _assert_row_count_exact(spark, table, sch)
+    table.delete_keys(spark, sch, spark.createDataFrame([(2,)], "world_bank_id long"))
+    _assert_row_count_exact(spark, table, sch, known=False)
+    table.compact(spark, sch)
+    assert table._load_manifest()["rows"] == 3
+    _assert_row_count_exact(spark, table, sch)

@@ -299,3 +299,62 @@ def test_parallel_legs_match_serial_byte_for_byte(
         ra = sorted(map(tuple, a.select(*cols).collect()))
         rb = sorted(map(tuple, b.select(*cols).collect()))
         assert ra == rb
+
+
+def test_read_snapshot_pins_schema(spark, spark_jobs, tmp_path):
+    """read_snapshot reads with the declared schema: no schema-inference
+    job, and a snapshot directory without data files is an empty typed
+    frame instead of an inference error."""
+    from etl_world_banks_with_python_and_postgresql_spark import schemas
+    from etl_world_banks_with_python_and_postgresql_spark.sources import sinks
+
+    sch = schemas.EXCHANGES_RATES
+    path = str(tmp_path / "snap")
+    sinks.write_snapshot(
+        spark.createDataFrame(
+            [(1, "US", "USD", 1.0, date(2023, 12, 31), "b1", datetime(2024, 8, 1), None)],
+            sch,
+        ),
+        path,
+    )
+    with spark_jobs() as jobs:
+        df = sinks.read_snapshot(spark, path, sch)
+    assert jobs == []
+    assert df.columns == sch.fieldNames() and df.count() == 1
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    df = sinks.read_snapshot(spark, str(empty), sch)
+    assert df.columns == sch.fieldNames() and df.count() == 0
+
+
+# Spark jobs of one incremental refresh of the fixture pages that also
+# compacts (compact_after=2), as measured; the same refresh submitted 62
+# while its bookkeeping reads ran as Spark jobs.
+INCREMENTAL_REFRESH_JOB_BUDGET = 41
+
+
+def test_incremental_refresh_job_budget(spark, spark_jobs, sources, tmp_path, monkeypatch):
+    """A metadata read that turns back into a Spark job (schema inference,
+    a row count, a max-id scan) or a second counters collect fails this
+    instead of silently costing driver CPU on every refresh."""
+    banks_src, rates_src, warehouse = sources
+    # job groups are thread-local: run both legs on the calling thread
+    monkeypatch.setenv("SPARK_GRAFT_PIPELINE_SERIAL", "1")
+    banks2 = [("Bank A", 500.0), ("Bank K", 42.0)] + [
+        (n, v) for n, v in BANKS if n not in ("Bank A", "Bank B")
+    ]
+    b2 = tmp_path / "banks2.html"
+    b2.write_text(banks_html(banks2, lastmod="2 August 2024"))
+
+    def cfg(i, bsrc):
+        return PipelineConfig(
+            banks_source=bsrc, rates_source=rates_src, target_dir=warehouse,
+            batch_id=f"run-{i}", now=datetime(2024, 8, i, 6, 0, 0),
+            incremental=True, compact_after=2,
+        )
+
+    run_pipeline(spark, cfg(1, banks_src))
+    with spark_jobs() as jobs:
+        res = run_pipeline(spark, cfg(2, str(b2)))
+    assert counters(res.banks) == (1, 1, 8)
+    assert len(jobs) <= INCREMENTAL_REFRESH_JOB_BUDGET, len(jobs)
