@@ -1,10 +1,11 @@
 """Pluggable atomic commit seam for every JSON ledger / manifest in the
-engine.
+engine, and the one place that publishes a replaced parquet directory.
 
 Every piece of metadata that makes state visible -- the IVM ledgers
 (`operators/ivm.py`), the incremental-table manifest
-(`sources/incremental.py`), the streaming epoch ledger and posting-index
-stats (`streaming/pipeline.py`, `operators/text.py`) -- commits through
+(`sources/incremental.py`), the streaming epoch ledger, the index stats
+and layout sidecars (`streaming/pipeline.py`, `operators/text.py`,
+`operators/dedup.py`, `operators/similarity.py`) -- commits through
 this module instead of hand-rolled ``tmp + os.replace``. That buys two
 things the scattered call sites could not give:
 
@@ -53,10 +54,23 @@ write and install it via :func:`set_default_committer`:
 * unguarded commit -> plain PUT (whole-object PUT is atomic on every
   major object store).
 
-The parquet DATA files never need this seam: they are written under
-batch-/version-named directories that are invisible until the metadata
-commit points at them, so eventually-consistent or non-atomic data
-writes are already safe.
+Parquet data under batch-/version-named directories needs no seam: it
+is invisible until a metadata commit points at it. Data that REPLACES a
+directory in place (snapshots, rollup/index compaction, IVF rebuilds)
+is published by :func:`replace_dir`, under this contract:
+
+* write ``<path>.staging``; rename ``path`` to ``<path>.old`` and
+  ``.staging`` to ``path`` (the commit point; POSIX directory rename is
+  atomic on one filesystem); fsync the parent; delete ``.old``.
+* One writer per directory (compactions hold :func:`maintenance_lock`
+  exclusively).
+* Readers resolve the directory with :func:`live_dir`, which serves
+  ``.old`` while a crash between the two renames has left only it.
+* Writers that append into a swapped directory call :func:`restore_dir`
+  first; :func:`replace_dir` does too, before its own swap.
+* Object stores have no atomic directory rename: there use the
+  ``IncrementalTable`` sink (`sources/incremental.py`), whose manifest
+  commit is the pointer swap.
 """
 
 from __future__ import annotations
@@ -65,6 +79,7 @@ import fcntl
 import hashlib
 import json
 import os
+import shutil
 import tempfile
 from contextlib import contextmanager
 from dataclasses import dataclass
@@ -170,11 +185,15 @@ class JsonCommitter:
         # fsync the directory so the rename itself is durable; without
         # it a crash can roll back to the previous ledger (stale but
         # consistent -- acceptable), never to a torn one.
-        dfd = os.open(directory, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
+        _fsync_dir(directory)
+
+
+def _fsync_dir(directory: str) -> None:
+    dfd = os.open(directory, os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
 
 
 #: The POSIX default; swap with :func:`set_default_committer`.
@@ -238,3 +257,90 @@ def commit_json(
 ) -> Token:
     """Atomic publish -- see :meth:`JsonCommitter.commit`."""
     return (committer or _default).commit(path, obj, expect=expect)
+
+
+def fold_stats(
+    stats_path: str,
+    stats: dict,
+    tok: Token,
+    delta: dict,
+    *,
+    layout: tuple[str, ...],
+    retries: int,
+    what: str,
+) -> Token:
+    """Add ``delta`` to an index stats sidecar loaded as ``(stats,
+    tok)`` and commit it compare-and-swap. Appenders' deltas commute, so
+    a lost race reloads the rival's stats and re-adds OUR delta (at most
+    ``retries`` times); a changed ``layout`` field means a concurrent
+    rebuild and raises at once."""
+    fixed = {f: stats.get(f) for f in layout}
+    for attempt in range(retries + 1):
+        for f, d in delta.items():
+            stats[f] += d
+        try:
+            return commit_json(stats_path, stats, expect=tok)
+        except ConcurrentCommitError:
+            if attempt == retries:
+                raise ConcurrentCommitError(
+                    f"{what} stats CAS at {stats_path} lost {retries + 1} "
+                    "straight races; this batch's rows are ALREADY "
+                    "appended, so re-running the append would "
+                    "double-append -- rebuild the index, or retry under "
+                    "lower contention"
+                )
+            stats, tok = load_json(stats_path)
+            if stats is None or any(stats.get(f) != v for f, v in fixed.items()):
+                raise RuntimeError(
+                    f"{what} at {os.path.dirname(stats_path)} was rebuilt "
+                    "concurrently with an append (layout changed); the "
+                    "appended batch is not part of the rebuilt index -- "
+                    "re-append it or rebuild from the full corpus"
+                )
+
+
+def live_dir(path: str) -> str:
+    """The directory holding ``path``'s committed contents: ``path``,
+    or ``<path>.old`` when a crash between :func:`replace_dir`'s two
+    renames left only the backup. Changes nothing on disk."""
+    if not os.path.exists(path) and os.path.exists(path + ".old"):
+        return path + ".old"
+    return path
+
+
+def restore_dir(path: str) -> None:
+    """Finish a :func:`replace_dir` swap a crash interrupted: with
+    ``path`` missing, ``<path>.old`` is renamed back; with both present
+    the swap had committed, and ``.old`` is deleted. Idempotent, so
+    appenders sharing a :func:`maintenance_lock` may race here."""
+    backup = path + ".old"
+    if not os.path.exists(backup):
+        return
+    if os.path.exists(path):
+        shutil.rmtree(backup, ignore_errors=True)
+        return
+    try:
+        os.rename(backup, path)
+    except FileNotFoundError:
+        return  # a racing restore_dir renamed it first
+    _fsync_dir(os.path.dirname(os.path.abspath(path)))
+
+
+def replace_dir(path: str, write):
+    """Replace the directory ``path`` with what ``write(staging)``
+    writes (contract in the module docstring); returns ``write``'s
+    result. ``write`` runs before :func:`restore_dir`: its input may be
+    a lazy read of ``.old`` through :func:`live_dir`, whose files the
+    rollback would move out from under the plan."""
+    staging, backup = path + ".staging", path + ".old"
+    if os.path.exists(staging):
+        shutil.rmtree(staging)
+    result = write(staging)
+    restore_dir(path)
+    if os.path.exists(path):
+        os.rename(path, backup)
+    os.rename(staging, path)  # the commit point
+    _fsync_dir(os.path.dirname(os.path.abspath(path)))
+    if os.path.exists(backup):
+        shutil.rmtree(backup)
+    return result

@@ -821,16 +821,12 @@ def append_minhash_index(
     so concurrent appenders still run in parallel (their stats CAS
     serializes only the ledger swap) but an append can never interleave
     with :func:`compact_minhash_index`'s destructive swap -- the
-    ADVICE-r9 lost-part-file race.
+    ADVICE-r9 lost-part-file race. A subdir swap a crash interrupted is
+    rolled back (``committer.restore_dir``) before anything is appended.
     """
     import os
 
-    from ..committer import (
-        ConcurrentCommitError,
-        commit_json,
-        load_json,
-        maintenance_lock,
-    )
+    from ..committer import fold_stats, load_json, maintenance_lock, restore_dir
 
     stats_path = os.path.join(path, "_minhash_stats.json")
     with maintenance_lock(path, exclusive=False):
@@ -840,30 +836,40 @@ def append_minhash_index(
                 f"no minhash index at {path}: build one with "
                 "write_minhash_index before appending"
             )
-        n, k = stats["n"], stats["k"]
-        band_size, n_buckets = stats["band_size"], stats["n_buckets"]
-        delta = _write_minhash_rows(batch, path, "append", n, k, band_size,
-                                    n_buckets, text_col, id_col)
-        for attempt in range(cas_retries + 1):
-            stats["n_docs"] += delta
-            try:
-                commit_json(stats_path, stats, expect=tok)
-                return
-            except ConcurrentCommitError:
-                if attempt == cas_retries:
-                    raise
-                stats, tok = load_json(stats_path)
-                if stats is None or any(
-                    stats[f] != v
-                    for f, v in (("n", n), ("k", k),
-                                 ("band_size", band_size),
-                                 ("n_buckets", n_buckets))
-                ):
-                    raise RuntimeError(
-                        f"minhash index at {path} was rebuilt concurrently "
-                        "with an append (layout changed); re-append the "
-                        "batch or rebuild from the full corpus"
-                    )
+        for sub in ("sets", "bands"):
+            restore_dir(os.path.join(path, sub))
+        delta = _write_minhash_rows(
+            batch, path, "append", stats["n"], stats["k"], stats["band_size"],
+            stats["n_buckets"], text_col, id_col,
+        )
+        fold_stats(
+            stats_path, stats, tok, {"n_docs": delta},
+            layout=("n", "k", "band_size", "n_buckets"),
+            retries=cas_retries, what="minhash index",
+        )
+
+
+def _compact_bucketed(spark, d: str, count_docs: bool = True):
+    """Distinct-dedup one bucket-partitioned index subdir and swap it in
+    with :func:`..committer.replace_dir`. Returns ``(rows removed,
+    distinct doc_ids kept or None)``. Callers hold the EXCLUSIVE
+    maintenance lock."""
+    from ..committer import live_dir, replace_dir
+
+    before = spark.read.parquet(live_dir(d))
+    n_before = before.count()
+
+    def write(staging):
+        before.distinct().repartition(F.col("bucket")).write.partitionBy(
+            "bucket"
+        ).parquet(staging)
+        after = spark.read.parquet(staging)
+        docs = after.select("doc_id").distinct().count() if count_docs else None
+        return after.count(), docs
+
+    n_after, n_docs = replace_dir(d, write)
+    spark.catalog.refreshByPath(d)
+    return n_before - n_after, n_docs
 
 
 def compact_minhash_index(spark, path: str) -> dict:
@@ -876,11 +882,11 @@ def compact_minhash_index(spark, path: str) -> dict:
     Probe results are untouched BY CONSTRUCTION: duplicate band rows
     only re-emit candidates that ``distinct()`` collapses, and duplicate
     set rows collapse in the dup-id distinct -- compaction removes
-    exactly the rows that could never change an answer. The swap is
-    staging-dir + rename per subdir (the ``rebuild_ivf_index``
-    protocol): readers never observe a half-compacted subdir, and the
-    ordering (sets swapped before bands) keeps the mid-crash state
-    probe-safe for the same reason appends write sets first. Returns
+    exactly the rows that could never change an answer. Each subdir is
+    swapped by :func:`..committer.replace_dir`: readers never observe a
+    half-compacted subdir, and the ordering (sets swapped before bands)
+    keeps the mid-crash state probe-safe for the same reason appends
+    write sets first. Returns
     ``{"n_docs": ..., "set_rows_removed": ..., "band_rows_removed": ...}``.
 
     Concurrency: the whole read → dedup → swap → commit span holds the
@@ -905,13 +911,11 @@ def compact_minhash_index(spark, path: str) -> dict:
     their file list -- re-read after compacting.
     """
     import os
-    import shutil
 
     from ..committer import commit_json, load_json, maintenance_lock
 
     stats_path = os.path.join(path, "_minhash_stats.json")
     removed = {}
-    n_docs = None
     with maintenance_lock(path, exclusive=True):
         # load INSIDE the lock: the CAS token is taken after every
         # possible concurrent append has drained, so the final commit
@@ -921,27 +925,13 @@ def compact_minhash_index(spark, path: str) -> dict:
         stats, tok = load_json(stats_path)
         if stats is None:
             raise FileNotFoundError(f"no minhash index at {path}")
-        for sub in ("sets", "bands"):  # sets first: crash ordering
-            d = os.path.join(path, sub)
-            before = spark.read.parquet(d)
-            n_before = before.count()
-            staging, backup = d + ".staging", d + ".old"
-            for tmp in (staging, backup):
-                if os.path.exists(tmp):
-                    shutil.rmtree(tmp)
-            deduped = before.distinct().repartition(F.col("bucket"))
-            deduped.write.partitionBy("bucket").parquet(staging)
-            n_after = spark.read.parquet(staging).count()
-            if sub == "sets":
-                n_docs = (
-                    spark.read.parquet(staging)
-                    .select("doc_id").distinct().count()
-                )
-            os.rename(d, backup)
-            os.rename(staging, d)
-            shutil.rmtree(backup)
-            spark.catalog.refreshByPath(d)
-            removed[f"{sub[:-1]}_rows_removed"] = n_before - n_after
+        # sets first: crash ordering; n_docs counts the deduped sets
+        removed["set_rows_removed"], n_docs = _compact_bucketed(
+            spark, os.path.join(path, "sets")
+        )
+        removed["band_rows_removed"], _ = _compact_bucketed(
+            spark, os.path.join(path, "bands"), count_docs=False
+        )
         stats["n_docs"] = n_docs
         commit_json(stats_path, stats, expect=tok)
     return {"n_docs": n_docs, **removed}
@@ -1698,12 +1688,7 @@ def append_winnow_index(
     """
     import os
 
-    from ..committer import (
-        ConcurrentCommitError,
-        commit_json,
-        load_json,
-        maintenance_lock,
-    )
+    from ..committer import fold_stats, load_json, maintenance_lock, restore_dir
 
     stats_path = os.path.join(path, "_winnow_stats.json")
     with maintenance_lock(path, exclusive=False):
@@ -1713,35 +1698,22 @@ def append_winnow_index(
                 f"no winnow index at {path}: build one with "
                 "write_winnow_index before appending"
             )
-        k, window = stats["k"], stats["window"]
-        n_buckets = stats["n_buckets"]
-        rows = _winnow_fp_rows(batch, k, window, n_buckets, text_col, id_col)
+        fps = os.path.join(path, "fps")
+        restore_dir(fps)
+        rows = _winnow_fp_rows(batch, stats["k"], stats["window"],
+                               stats["n_buckets"], text_col, id_col)
         delta = rows.select("doc_id").distinct().count()
         (
             rows.repartition(F.col("bucket"))
             .write.mode("append")
             .partitionBy("bucket")
-            .parquet(os.path.join(path, "fps"))
+            .parquet(fps)
         )
-        for attempt in range(cas_retries + 1):
-            stats["n_docs"] += delta
-            try:
-                commit_json(stats_path, stats, expect=tok)
-                return
-            except ConcurrentCommitError:
-                if attempt == cas_retries:
-                    raise
-                stats, tok = load_json(stats_path)
-                if stats is None or any(
-                    stats[f] != v
-                    for f, v in (("k", k), ("window", window),
-                                 ("n_buckets", n_buckets))
-                ):
-                    raise RuntimeError(
-                        f"winnow index at {path} was rebuilt concurrently "
-                        "with an append (layout changed); re-append the "
-                        "batch or rebuild from the full corpus"
-                    )
+        fold_stats(
+            stats_path, stats, tok, {"n_docs": delta},
+            layout=("k", "window", "n_buckets"),
+            retries=cas_retries, what="winnow index",
+        )
 
 
 def winnow_novel_indexed(
@@ -1862,14 +1834,13 @@ def compact_winnow_index(spark, path: str) -> dict:
     subdir: distinct-dedup the postings (duplicates only exist after
     re-appended batches; the probe's DISTINCT counts made them harmless
     but they are dead storage), reset ``n_docs`` to the true distinct
-    count, swap via staging + rename under the EXCLUSIVE maintenance
-    lock (appends hold it SHARED, so no in-flight part file can be
-    dropped). Probe results are untouched BY CONSTRUCTION -- compaction
+    count, swap via :func:`..committer.replace_dir` under the EXCLUSIVE
+    maintenance lock (appends hold it SHARED, so no in-flight part file
+    can be dropped). Probe results are untouched BY CONSTRUCTION -- compaction
     removes exactly the rows the probe's distincts already collapse.
     Returns ``{"n_docs": ..., "fp_rows_removed": ...}``.
     """
     import os
-    import shutil
 
     from ..committer import commit_json, load_json, maintenance_lock
 
@@ -1878,27 +1849,10 @@ def compact_winnow_index(spark, path: str) -> dict:
         stats, tok = load_json(stats_path)
         if stats is None:
             raise FileNotFoundError(f"no winnow index at {path}")
-        d = os.path.join(path, "fps")
-        before = spark.read.parquet(d)
-        n_before = before.count()
-        staging, backup = d + ".staging", d + ".old"
-        for tmp in (staging, backup):
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp)
-        before.distinct().repartition(F.col("bucket")).write.partitionBy(
-            "bucket"
-        ).parquet(staging)
-        n_after = spark.read.parquet(staging).count()
-        n_docs = (
-            spark.read.parquet(staging).select("doc_id").distinct().count()
-        )
-        os.rename(d, backup)
-        os.rename(staging, d)
-        shutil.rmtree(backup)
-        spark.catalog.refreshByPath(d)
+        removed, n_docs = _compact_bucketed(spark, os.path.join(path, "fps"))
         stats["n_docs"] = n_docs
         commit_json(stats_path, stats, expect=tok)
-    return {"n_docs": n_docs, "fp_rows_removed": n_before - n_after}
+    return {"n_docs": n_docs, "fp_rows_removed": removed}
 
 
 def temporal_novelty(

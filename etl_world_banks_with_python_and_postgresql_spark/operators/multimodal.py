@@ -57,16 +57,6 @@ def attach_fake_binary(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("payload", F.encode(F.col(text_col), "utf-8"))
 
 
-def fake_decode_meta(n_bytes: int) -> tuple[int, int, str]:
-    """Deterministic stand-in for an image header parse.
-
-    A real implementation would be `PIL.Image.open(io.BytesIO(b))`; the
-    fake derives (width, height, format) from the byte length only, so the
-    oracle can verify the distributed plumbing end-to-end.
-    """
-    return 64 + n_bytes % 512, 64 + (n_bytes * 7) % 512, "FAKE"
-
-
 def decode_image_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Extract image metadata via Arrow-batched mapInPandas.
 

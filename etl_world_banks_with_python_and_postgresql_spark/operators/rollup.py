@@ -17,11 +17,11 @@ q51_approx_sketches.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+from ..committer import live_dir, replace_dir, restore_dir
 
 
 class RollupTable:
@@ -75,7 +75,10 @@ class RollupTable:
 
     def ingest(self, batch: DataFrame) -> None:
         """Append the batch's partial aggregates. O(|batch| groups) write;
-        raw events are NOT retained here."""
+        raw events are NOT retained here. A compaction swap a crash
+        interrupted is rolled back first, so no partial is appended
+        next to (and later lost with) a stranded ``.old``."""
+        restore_dir(self.path)
         self._partials(batch).write.mode("append").parquet(self.path)
 
     def read(self, spark: SparkSession) -> DataFrame:
@@ -85,13 +88,7 @@ class RollupTable:
         from the merged sums. The second aggregation runs over partial
         rows (|batches| x groups), not events.
         """
-        read_path = self.path
-        if not os.path.exists(read_path) and os.path.exists(self.path + ".old"):
-            # a crash mid-compact (between the two swap renames) leaves the
-            # data only in .old; serve it rather than failing the read --
-            # the next successful compact re-establishes the primary path
-            read_path = self.path + ".old"
-        p = spark.read.parquet(read_path)
+        p = spark.read.parquet(live_dir(self.path))
         out = (
             p.groupBy("win_start", *self.keys)
             .agg(
@@ -116,17 +113,15 @@ class RollupTable:
         return out
 
     def n_partial_rows(self, spark: SparkSession) -> int:
-        return spark.read.parquet(self.path).count()
+        return spark.read.parquet(live_dir(self.path)).count()
 
     def compact(self, spark: SparkSession) -> None:
-        """Fold accumulated partials to one row per group (atomic swap --
-        same staging discipline as sinks.write_snapshot). Run it on the
-        incremental table's cadence; reads are correct either way, this
-        only bounds the merge-on-read fan-in."""
-        import shutil
-
+        """Fold accumulated partials to one row per group, swapped in by
+        :func:`..committer.replace_dir`. Run it on the incremental
+        table's cadence; reads are correct either way, this only bounds
+        the merge-on-read fan-in."""
         merged = (
-            spark.read.parquet(self.path)
+            spark.read.parquet(live_dir(self.path))
             .groupBy("win_start", *self.keys)
             .agg(
                 F.sum("n").alias("n"),
@@ -142,19 +137,9 @@ class RollupTable:
                 ),
             )
         )
-        staging = self.path + ".staging"
-        merged.write.mode("overwrite").parquet(staging)
-        backup = self.path + ".old"
-        if os.path.exists(backup):
-            shutil.rmtree(backup)
-        os.rename(self.path, backup)
-        os.rename(staging, self.path)
-        # drop the backup only after the swapped-in snapshot proves
-        # readable: a crash between the two renames (or a bad staging
-        # write) must leave a recoverable copy -- read() falls back to
-        # .old when the primary path is missing
-        spark.read.parquet(self.path).head(1)
-        shutil.rmtree(backup)
+        replace_dir(
+            self.path, lambda staging: merged.write.mode("overwrite").parquet(staging)
+        )
 
     def streaming_sink(self):
         """foreachBatch body: continuous-aggregate maintenance from a

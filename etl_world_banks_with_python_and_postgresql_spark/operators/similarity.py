@@ -572,8 +572,9 @@ def write_ivf_index(
     cost is one corpus scan + one partitioned write; pass
     ``centroids=kmeans_centroids(...)`` for trained cells.
     """
-    import json
     import os
+
+    from ..committer import commit_json
 
     if centroids is None:
         centroids = _hash_sample_centroids(corpus, n_centroids, id_col, vec_col)
@@ -583,19 +584,19 @@ def write_ivf_index(
     corpus.withColumn("cell", cell).write.mode("overwrite").partitionBy(
         "cell"
     ).parquet(path)
-    # local-path sidecar; on an object store this would go through the
-    # same FS client as the manifest writes in sources/incremental.py
-    with open(os.path.join(path, "_ivf_centroids.json"), "w") as f:
-        json.dump(centroids, f)
+    commit_json(os.path.join(path, "_ivf_centroids.json"), centroids)
     return centroids
 
 
 def read_ivf_centroids(path: str) -> list[list[float]]:
-    import json
     import os
 
-    with open(os.path.join(path, "_ivf_centroids.json")) as f:
-        return json.load(f)
+    from ..committer import load_json
+
+    centroids, _ = load_json(os.path.join(path, "_ivf_centroids.json"))
+    if centroids is None:
+        raise FileNotFoundError(f"no IVF index at {path}")
+    return centroids
 
 
 def ivf_topk_indexed(
@@ -1040,7 +1041,11 @@ def append_ivf_index(
     add files under already-probed directories, so reader pruning is
     unaffected. (File visibility is per-file atomic; a manifest commit a
     la sources/incremental.py would make multi-file appends atomic too.)
+    An interrupted :func:`rebuild_ivf_index` swap is rolled back first.
     """
+    from ..committer import restore_dir
+
+    restore_dir(path)
     centroids = read_ivf_centroids(path)
     cell = _nearest_cells(
         _to_double(F.col(vec_col)), _centroid_literals(centroids), 1
@@ -1164,31 +1169,18 @@ def rebuild_ivf_index(
     O(batch) between rebuilds, and the rebuild pays one full
     scan + partitioned write to restore cell balance after centroid drift
     -- exactly the delta/compact cost split of ``sources/incremental.py``.
-    The swap is staging-dir + rename (the ``sinks.write_snapshot``
-    protocol): readers never observe a half-built index, and the old index
-    serves reads until the rename.
+    The swap is :func:`..committer.replace_dir`: readers never observe a
+    half-built index, and the old index serves reads until the rename.
     """
-    import os
-    import shutil
+    from ..committer import live_dir, replace_dir
 
-    corpus = spark.read.parquet(path).select(id_col, vec_col)
-    staging = path + ".staging"
-    backup = path + ".old"
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
-    cents = write_ivf_index(
+    # corpus is lazy over the OLD index's files: replace_dir runs the
+    # write (which consumes them) before it moves any directory
+    corpus = spark.read.parquet(live_dir(path)).select(id_col, vec_col)
+    return replace_dir(path, lambda staging: write_ivf_index(
         corpus, staging, n_centroids=n_centroids, centroids=centroids,
         id_col=id_col, vec_col=vec_col,
-    )
-    # corpus is lazy over the OLD path's files: the parquet rows were
-    # already copied into staging by the write above, so the swap below
-    # never invalidates an in-flight plan of ours
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup)
-    return cents
+    ))
 
 
 def scalar_quantization_params(
@@ -1641,8 +1633,9 @@ def write_ivfpq_index(
     scan fusing cell assignment (raw vector) and encoding into the
     partitioned write. Queries go through :func:`ivfpq_topk_indexed`.
     """
-    import json
     import os
+
+    from ..committer import commit_json
 
     if centroids is None:
         centroids = _hash_sample_centroids(corpus, n_centroids, id_col, vec_col)
@@ -1677,17 +1670,19 @@ def write_ivfpq_index(
         "id_col": id_col,
         "vec_col": vec_col,
     }
-    with open(os.path.join(path, "_ivfpq_meta.json"), "w") as f:
-        json.dump(meta, f)
+    commit_json(os.path.join(path, "_ivfpq_meta.json"), meta)
     return meta
 
 
 def read_ivfpq_meta(path: str) -> dict:
-    import json
     import os
 
-    with open(os.path.join(path, "_ivfpq_meta.json")) as f:
-        return json.load(f)
+    from ..committer import load_json
+
+    meta, _ = load_json(os.path.join(path, "_ivfpq_meta.json"))
+    if meta is None:
+        raise FileNotFoundError(f"no IVF-PQ index at {path}")
+    return meta
 
 
 def ivfpq_topk_indexed(

@@ -959,16 +959,17 @@ def append_posting_index(
     delta COMMUTES (the same algebra as ``CdcAggView.ingest`` partials),
     a lost CAS is recovered by reload-and-re-add: fold OUR delta into
     the rival's committed stats and retry, bounded by ``cas_retries``.
-    Nothing is recomputed or re-appended on retry. If retries exhaust,
-    the raise names the hazard: the batch's postings are already on
-    disk, so RE-RUNNING this function would double-append -- rebuild
-    with :func:`write_posting_index` instead. A concurrent REBUILD
+    Nothing is recomputed or re-appended on retry
+    (``committer.fold_stats``). If retries exhaust, the raise names the
+    hazard: the batch's postings are already on disk, so RE-RUNNING this
+    function would double-append -- rebuild with
+    :func:`write_posting_index` instead. A concurrent REBUILD
     (n_buckets/positional changed under us) is a contract violation and
     raises without retrying.
     """
     import os
 
-    from ..committer import ConcurrentCommitError, commit_json, load_json
+    from ..committer import fold_stats, load_json
 
     stats_path = os.path.join(path, "_postings_stats.json")
     stats, tok = load_json(stats_path)
@@ -994,34 +995,12 @@ def append_posting_index(
         F.count("*").alias("n_docs"),
         F.sum(token_count(F.col(text_col)).cast("long")).alias("sum_dl"),
     ).collect()[0]
-    delta_docs = int(batch["n_docs"])
-    delta_dl = int(batch["sum_dl"] or 0)
-    for attempt in range(cas_retries + 1):
-        stats["n_docs"] += delta_docs
-        stats["sum_dl"] += delta_dl
-        try:
-            commit_json(stats_path, stats, expect=tok)
-            return
-        except ConcurrentCommitError:
-            if attempt == cas_retries:
-                raise ConcurrentCommitError(
-                    f"posting-index stats CAS at {stats_path} lost "
-                    f"{cas_retries + 1} straight races; this batch's "
-                    "postings are ALREADY appended, so re-running "
-                    "append_posting_index would double-append -- "
-                    "rebuild with write_posting_index, or retry under "
-                    "lower contention"
-                )
-            stats, tok = load_json(stats_path)
-            if stats is None or stats["n_buckets"] != n_buckets or (
-                stats.get("positional", False) != positional
-            ):
-                raise RuntimeError(
-                    f"posting index at {path} was rebuilt concurrently "
-                    "with an append (bucket layout changed); the "
-                    "appended batch is not part of the rebuilt index -- "
-                    "re-append it or rebuild from the full corpus"
-                )
+    fold_stats(
+        stats_path, stats, tok,
+        {"n_docs": int(batch["n_docs"]), "sum_dl": int(batch["sum_dl"] or 0)},
+        layout=("n_buckets", "positional"),
+        retries=cas_retries, what="posting index",
+    )
 
 
 def top_terms_per_doc(

@@ -710,7 +710,7 @@ def cluster_safe_split(
     pinned by test, not just claimed.
     """
     from ..functions.xhash import char_poly_hash
-    from .dedup_imports import duplicate_clusters, ngram_jaccard_pairs
+    from .dedup import duplicate_clusters, ngram_jaccard_pairs
 
     pairs = ngram_jaccard_pairs(df, threshold=threshold, text_col=text_col,
                                 id_col=id_col, unpersist_after=False)

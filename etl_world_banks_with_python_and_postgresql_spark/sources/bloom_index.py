@@ -134,10 +134,3 @@ def bloom_lookup(
         return empty.filter(F.lit(False))
     files = [os.path.join(path, "data", n) for n in sorted(keep)]
     return spark.read.parquet(*files).filter(F.col(key_col).isin(values))
-
-
-def bloom_pruned_fraction(path: str, key_col: str, kept_files: int) -> float:
-    """Observability helper: fraction of data files a lookup skipped."""
-    sidecar, _ = load_json(os.path.join(path, _SIDECAR.format(key=key_col)))
-    total = len(sidecar["files"])
-    return (total - kept_files) / total if total else 0.0

@@ -8,7 +8,7 @@ managed table (saveAsTable); bucket info lives in the catalog.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -23,9 +23,3 @@ def write_bucketed(
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table)
-
-
-def bucketed_join_ready(spark: SparkSession, table_a: str, table_b: str) -> bool:
-    """True when both tables exist and are bucketed (catalog check)."""
-    cat = spark.catalog
-    return cat.tableExists(table_a) and cat.tableExists(table_b)

@@ -65,12 +65,6 @@ def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFr
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every TESTDATA table as a temp view for spark.sql queries."""
-    for name in TABLE_NAMES:
-        load(spark, name, sf_dir).createOrReplaceTempView(name)
-
-
 def parquet_footer_stats(
     spark: SparkSession, path: str, cols: list[str]
 ) -> dict[str, dict]:

@@ -4,8 +4,9 @@ and the JDBC protocol (gated -- no Postgres in this environment).
 The reference's sink is one psycopg2 connection doing a per-row procedure
 CALL (ipynb:213-261) inside a single transaction (ipynb:263). The engine
 replaces that with set-based writes; reference-equivalent atomicity comes
-from writing a full new snapshot to a staging location and swapping it in
-(§4 of SURVEY: JDBC per-partition writes are not atomic on their own).
+from writing a full new snapshot and publishing it with
+:func:`..committer.replace_dir` (§4 of SURVEY: JDBC per-partition writes
+are not atomic on their own).
 """
 
 from __future__ import annotations
@@ -16,36 +17,32 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..committer import commit_json, live_dir, load_json, replace_dir
+
 
 def write_snapshot(df: DataFrame, path: str, target_files: int | None = None) -> None:
     """Atomically replace the parquet snapshot at ``path``.
 
-    Write to ``path``.staging first, then swap directories -- readers never
-    observe a half-written snapshot, which is the moral equivalent of the
-    reference's single `conn.commit()` per table load (ipynb:263). On a
-    real deployment the same role is played by a transactional table format
-    (Delta/Iceberg) or the staging-table+MERGE protocol in `jdbc_merge`.
+    Published by :func:`..committer.replace_dir` -- readers never observe
+    a half-written snapshot and no crash point loses the committed one,
+    which is the moral equivalent of the reference's single
+    `conn.commit()` per table load (ipynb:263). On a real deployment the
+    same role is played by a transactional table format (Delta/Iceberg)
+    or the staging-table+MERGE protocol in `jdbc_merge`.
     """
-    staging = path + ".staging"
-    backup = path + ".old"
     if target_files is not None:
         # dimension-sized tables: don't emit one near-empty file per input
         # partition (task + file-listing overhead dwarfs the data)
         df = df.coalesce(target_files)
-    df.write.mode("overwrite").parquet(staging)
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
-    if os.path.exists(path):
-        os.rename(path, backup)
-    os.rename(staging, path)
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
+    replace_dir(path, lambda staging: df.write.mode("overwrite").parquet(staging))
 
 
 def read_snapshot(spark: SparkSession, path: str, schema) -> DataFrame:
     """Read the snapshot with ``schema`` pinned (no schema-inference job;
     a directory without data files reads as an empty typed frame), or an
-    empty typed frame if it doesn't exist yet."""
+    empty typed frame if it doesn't exist yet. Resolved through
+    :func:`..committer.live_dir`, as are the footer reads below."""
+    path = live_dir(path)
     if os.path.exists(path):
         return spark.read.schema(schema).parquet(path)
     return spark.createDataFrame([], schema)
@@ -65,7 +62,7 @@ def snapshot_row_count(path: str) -> int:
     import pyarrow.parquet as pq
 
     total = 0
-    for root, dirs, files in os.walk(path):
+    for root, dirs, files in os.walk(live_dir(path)):
         dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         for name in files:
             if name.endswith(".parquet") and not name.startswith(("_", ".")):
@@ -84,6 +81,7 @@ def snapshot_column_max(path: str, col: str) -> int | None:
     never a semantics change)."""
     import pyarrow.parquet as pq
 
+    path = live_dir(path)
     if not os.path.exists(path):
         return 0
     mx = None
@@ -125,9 +123,12 @@ def append_log(df: DataFrame, path: str) -> None:
 
 def truncate(path: str) -> None:
     """S10 truncate sink: `TRUNCATE TABLE ... RESTART IDENTITY`
-    (SQL/etl_world_banks_workings.sql:6-7) for parquet-backed tables."""
-    if os.path.exists(path):
-        shutil.rmtree(path)
+    (SQL/etl_world_banks_workings.sql:6-7) for parquet-backed tables.
+    A crash-left ``.old`` goes first: :func:`..committer.live_dir` would
+    otherwise serve it once ``path`` is gone."""
+    for p in (path + ".old", path):
+        if os.path.exists(p):
+            shutil.rmtree(p)
 
 
 # --- JDBC protocol (gated: requires a JDBC driver jar + reachable DB) --------
@@ -252,8 +253,6 @@ def write_range_partitioned(
     consumer is not Spark.
     """
     import glob
-    import json
-    import os
 
     (
         df.repartitionByRange(n_files, F.col(col))
@@ -275,8 +274,7 @@ def write_range_partitioned(
         manifest.append(
             {"file": os.path.basename(f), "min": lo, "max": hi, "rows": st["count"]}
         )
-    with open(os.path.join(path, "_ranges.json"), "w") as f:
-        json.dump(manifest, f)
+    commit_json(os.path.join(path, "_ranges.json"), manifest)
     return manifest
 
 
@@ -312,8 +310,6 @@ def write_zordered(
     (repartitionByRange samples the key; each task sorts its own range).
     """
     import glob
-    import json
-    import os
 
     from ..functions.xhash import hilbert_key, zorder_key
 
@@ -347,8 +343,7 @@ def write_zordered(
                 "rows": st[col_a]["count"],
             }
         )
-    with open(os.path.join(path, "_zorder.json"), "w") as f:
-        json.dump(manifest, f)
+    commit_json(os.path.join(path, "_zorder.json"), manifest)
     return manifest
 
 
@@ -359,11 +354,9 @@ def zorder_candidate_files(
     :func:`write_zordered` export: files whose [min, max] box cannot
     intersect the query box are skipped without listing or reading them.
     Either range may be None (unbounded on that dimension)."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_zorder.json")) as f:
-        manifest = json.load(f)
+    manifest, _ = load_json(os.path.join(path, "_zorder.json"))
+    if manifest is None:
+        raise FileNotFoundError(f"no z-order manifest at {path}")
 
     def hits(e) -> bool:
         if a_range is not None and (
@@ -389,9 +382,9 @@ def compact_small_files(
     """OPTIMIZE-style small-file compaction for a plain parquet
     directory: rewrite the data into ceil(total_bytes /
     ``target_file_bytes``) files (the bin-packing file-count heuristic)
-    behind the same staging + backup + atomic-swap protocol as
-    :func:`write_snapshot`, so readers never see a half-compacted
-    directory and a crash mid-swap leaves the backup restorable.
+    published by :func:`write_snapshot`'s :func:`..committer.replace_dir`,
+    so readers never see a half-compacted directory and no crash point
+    loses the data.
 
     Many small files are the slow death of a big-data directory: task
     scheduling, file listing, and footer reads all scale with file
@@ -405,9 +398,10 @@ def compact_small_files(
     """
     import glob as _glob
 
+    src = live_dir(path)
     files = sorted(
         f
-        for f in _glob.glob(os.path.join(path, "*.parquet"))
+        for f in _glob.glob(os.path.join(src, "*.parquet"))
         if os.path.isfile(f)
     )
     total = sum(os.path.getsize(f) for f in files)
@@ -419,7 +413,7 @@ def compact_small_files(
             "bytes": total,
         }
     reader = spark.read.schema(schema) if schema is not None else spark.read
-    df = reader.parquet(path)
+    df = reader.parquet(src)
     write_snapshot(df, path, target_files=int(target_n))
     after = len(
         [f for f in _glob.glob(os.path.join(path, "*.parquet")) if os.path.isfile(f)]

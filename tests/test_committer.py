@@ -705,3 +705,316 @@ def test_posting_append_concurrent_rebuild_raises_without_retry(
             T.append_posting_index(ours, idx)
     finally:
         C.commit_json = real_commit
+
+
+# ------------------------------------------- directory swap: fault injection
+#
+# committer.replace_dir swaps a directory in three steps: rename ``path`` to
+# ``.old``, rename ``.staging`` to ``path`` (the commit point), remove
+# ``.old``. Each test below fails one step and checks that no committed
+# row is lost and that the next write/append/compaction carries on.
+
+SWAP_STEPS = ("rename_out", "rename_in", "drop_old")
+
+
+def _crash_swap_at(monkeypatch, path, step):
+    """Fail the swap of ``path`` once, at ``step``, by patching the
+    ``os.rename`` / ``shutil.rmtree`` the committer calls. Returns a
+    list that holds the step once the fault has fired."""
+    import shutil
+
+    real_rename, real_rmtree = os.rename, shutil.rmtree
+    fired = []
+
+    def crash_if(hit):
+        if hit and not fired:
+            fired.append(step)
+            raise OSError(f"injected crash at {step}")
+
+    def rename(src, dst, *args, **kwargs):
+        crash_if(
+            (step == "rename_out" and (src, dst) == (path, path + ".old"))
+            or (step == "rename_in" and (src, dst) == (path + ".staging", path))
+        )
+        return real_rename(src, dst, *args, **kwargs)
+
+    def rmtree(p, *args, **kwargs):
+        crash_if(step == "drop_old" and p == path + ".old")
+        return real_rmtree(p, *args, **kwargs)
+
+    monkeypatch.setattr(os, "rename", rename)
+    monkeypatch.setattr(shutil, "rmtree", rmtree)
+    return fired
+
+
+def _snapshot_state(spark, path, schema, id_col):
+    from etl_world_banks_with_python_and_postgresql_spark.sources import sinks
+
+    rows = sorted(map(tuple, sinks.read_snapshot(spark, path, schema).collect()))
+    return (
+        rows,
+        sinks.snapshot_row_count(path),
+        sinks.snapshot_column_max(path, id_col),
+    )
+
+
+@pytest.mark.parametrize("step", SWAP_STEPS)
+def test_write_snapshot_crash_keeps_committed_snapshot(
+    spark, tmp_path, monkeypatch, step
+):
+    """Before the rename into place the old snapshot is the committed
+    one, after it the new one; every reader agrees at every step, and
+    the next write leaves no ``.old`` / ``.staging`` behind."""
+    from etl_world_banks_with_python_and_postgresql_spark.sources import sinks
+
+    path = str(tmp_path / "snap")
+    schema = "id long, v string"
+
+    def frame(n, tag):
+        return spark.createDataFrame([(i, tag) for i in range(1, n + 1)], schema)
+
+    sinks.write_snapshot(frame(10, "a"), path)
+    old = _snapshot_state(spark, path, schema, "id")
+    assert old[1:] == (10, 10)
+    fired = _crash_swap_at(monkeypatch, path, step)
+    with pytest.raises(OSError, match="injected"):
+        sinks.write_snapshot(frame(15, "b"), path)
+    assert fired == [step]
+    got = _snapshot_state(spark, path, schema, "id")
+    if step == "drop_old":
+        assert got[1:] == (15, 15) and {r[1] for r in got[0]} == {"b"}
+    else:
+        assert got == old
+
+    sinks.write_snapshot(frame(12, "c"), path)
+    assert _snapshot_state(spark, path, schema, "id")[1:] == (12, 12)
+    assert not os.path.exists(path + ".old")
+    assert not os.path.exists(path + ".staging")
+
+
+@pytest.fixture(scope="module")
+def pipeline_pages(tmp_path_factory):
+    from etl_world_banks_with_python_and_postgresql_spark.sources.fixtures import (
+        BANKS,
+        RATES,
+        banks_html,
+        rates_html,
+    )
+
+    d = tmp_path_factory.mktemp("pages")
+    pages = {
+        "banks": banks_html(BANKS),
+        # day two: Bank A changes value, Bank B vanishes, Bank K appears
+        "banks2": banks_html(
+            [("Bank A", 500.0), ("Bank K", 42.0)]
+            + [(n, v) for n, v in BANKS if n not in ("Bank A", "Bank B")],
+            lastmod="2 August 2024",
+        ),
+        "rates": rates_html(RATES),
+    }
+    for name, html in pages.items():
+        (d / f"{name}.html").write_text(html)
+    return {name: str(d / f"{name}.html") for name in pages}
+
+
+def _run_day(spark, pages, warehouse, banks, day):
+    from datetime import datetime
+
+    from etl_world_banks_with_python_and_postgresql_spark.pipeline import (
+        PipelineConfig,
+        run_pipeline,
+    )
+
+    return run_pipeline(spark, PipelineConfig(
+        banks_source=pages[banks],
+        rates_source=pages["rates"],
+        target_dir=warehouse,
+        batch_id=f"run-{day}",
+        now=datetime(2024, 8, day, 6, 0, 0),
+    ))
+
+
+def _day_outputs(spark, res, warehouse, day):
+    banks = spark.read.parquet(f"{warehouse}/world_bank_data")
+    counts = spark.read.parquet(f"{warehouse}/log_counts").filter(
+        f"batch_id = 'run-{day}'"
+    )
+    return (
+        res.summary_lines,
+        sorted(map(tuple, counts.collect())),
+        sorted(map(tuple, banks.collect())),
+    )
+
+
+@pytest.fixture(scope="module")
+def day1_warehouse(spark, pipeline_pages, tmp_path_factory):
+    """A warehouse after the day-1 run; tests work on copies of it."""
+    wh = str(tmp_path_factory.mktemp("day1") / "warehouse")
+    _run_day(spark, pipeline_pages, wh, "banks", 1)
+    return wh
+
+
+@pytest.fixture(scope="module")
+def uncrashed_day3(spark, pipeline_pages, day1_warehouse, tmp_path_factory):
+    """Day 1 then day 3 with no crash in between: what the run after a
+    crashed day-2 re-run must reproduce."""
+    import shutil
+
+    wh = str(tmp_path_factory.mktemp("uncrashed") / "warehouse")
+    shutil.copytree(day1_warehouse, wh)
+    res = _run_day(spark, pipeline_pages, wh, "banks2", 3)
+    return _day_outputs(spark, res, wh, 3)
+
+
+@pytest.mark.parametrize("step", SWAP_STEPS)
+def test_pipeline_run_after_snapshot_swap_crash(
+    spark, pipeline_pages, day1_warehouse, uncrashed_day3, tmp_path,
+    monkeypatch, step
+):
+    """A snapshot-mode run that crashes inside the world_bank_data swap
+    loses nothing: the committed snapshot reads back whole through every
+    reader, and the next run gives the summary, log_counts row and
+    table of a history without the crash. The crashed run re-reads the
+    day-1 pages, so the snapshot it was publishing equals the committed
+    one and every step has the same pre-crash values."""
+    import shutil
+
+    from etl_world_banks_with_python_and_postgresql_spark import schemas
+
+    monkeypatch.setenv("SPARK_GRAFT_PIPELINE_SERIAL", "1")
+    wh = str(tmp_path / "warehouse")
+    shutil.copytree(day1_warehouse, wh)
+    banks = f"{wh}/world_bank_data"
+    committed = _snapshot_state(spark, banks, schemas.WORLD_BANK_DATA, "world_bank_id")
+    assert committed[1:] == (10, 10)
+    fired = _crash_swap_at(monkeypatch, banks, step)
+    with pytest.raises(OSError, match="injected"):
+        _run_day(spark, pipeline_pages, wh, "banks", 2)
+    assert fired == [step]
+    assert _snapshot_state(
+        spark, banks, schemas.WORLD_BANK_DATA, "world_bank_id"
+    ) == committed
+
+    res = _run_day(spark, pipeline_pages, wh, "banks2", 3)
+    assert _day_outputs(spark, res, wh, 3) == uncrashed_day3
+
+
+def test_rollup_compact_crash_keeps_every_partial(spark, tmp_path, monkeypatch):
+    """A crash between compaction's two renames, then an ingest and a
+    compaction: the rollup still holds every ingested event."""
+    from datetime import datetime
+
+    from etl_world_banks_with_python_and_postgresql_spark.operators.rollup import (
+        RollupTable,
+    )
+
+    schema = "ts timestamp, k string, value double"
+    first = spark.createDataFrame(
+        [(datetime(2024, 1, 1, 0, i), "ab"[i % 2], float(i)) for i in range(10)],
+        schema,
+    )
+    second = spark.createDataFrame([(datetime(2024, 1, 1, 0, 1), "b", 7.0)], schema)
+
+    def merged(rt):
+        return sorted(map(tuple, rt.read(spark).collect()))
+
+    clean = RollupTable(str(tmp_path / "clean"), keys=["k"])
+    clean.ingest(first)
+    clean.ingest(second)
+
+    rt = RollupTable(str(tmp_path / "rollup"), keys=["k"])
+    rt.ingest(first)
+    fired = _crash_swap_at(monkeypatch, rt.path, "rename_in")
+    with pytest.raises(OSError, match="injected"):
+        rt.compact(spark)
+    assert fired
+    assert sum(r["n"] for r in rt.read(spark).collect()) == 10
+    rt.ingest(second)
+    rt.compact(spark)
+    assert merged(rt) == merged(clean)
+    assert sum(r["n"] for r in rt.read(spark).collect()) == 11
+
+
+def test_minhash_compact_crash_keeps_every_doc_and_probe(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between the ``sets`` renames of a minhash compaction,
+    then an append and a compaction: every doc is still indexed, and
+    the probe still finds the near-copies of both seed and appended
+    docs."""
+    import random
+
+    from etl_world_banks_with_python_and_postgresql_spark.committer import load_json
+    from etl_world_banks_with_python_and_postgresql_spark.operators import dedup
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(60)]
+    texts = [" ".join(rng.choice(vocab) for _ in range(12)) for _ in range(24)]
+
+    def docs(pairs):
+        return spark.createDataFrame(list(pairs), "doc_id int, text string")
+
+    seed = docs((i, texts[i]) for i in range(12))
+    batch = docs((i, texts[i]) for i in range(12, 24))
+    # probes: near-copies of seed and batch docs, plus unrelated text
+    probe = docs(
+        [(100 + i, texts[i] + " tail") for i in (1, 5, 14, 20)]
+        + [(200, " ".join(vocab[:12])), (201, " ".join(vocab[-12:]))]
+    )
+
+    path = str(tmp_path / "idx")
+    dedup.write_minhash_index(seed, path, n_buckets=4)
+    fired = _crash_swap_at(monkeypatch, os.path.join(path, "sets"), "rename_in")
+    with pytest.raises(OSError, match="injected"):
+        dedup.compact_minhash_index(spark, path)
+    assert fired
+    dedup.append_minhash_index(batch, path)
+    out = dedup.compact_minhash_index(spark, path)
+    assert out["n_docs"] == 24
+    assert load_json(os.path.join(path, "_minhash_stats.json"))[0]["n_docs"] == 24
+    novel = dedup.minhash_novel_indexed(spark, probe, path)
+    assert sorted(r["doc_id"] for r in novel.collect()) == [200, 201]
+
+
+def test_only_committer_renames():
+    """Every directory swap goes through committer.replace_dir: no other
+    package module may call os.rename, os.replace or shutil.move. The
+    IVM views' per-batch moves into their ingest layout are allowlisted
+    by function name; they publish nothing (the ledger CAS does)."""
+    import ast
+    import pathlib
+
+    import etl_world_banks_with_python_and_postgresql_spark as pkg
+
+    banned = {("os", "rename"), ("os", "replace"), ("shutil", "move")}
+    allowed = {
+        ("operators/ivm.py", "_write_tagged_batches"),
+        ("operators/ivm.py", "ingest_many"),
+    }
+    root = pathlib.Path(pkg.__file__).parent
+    found = []
+
+    def visit(node, rel, func):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, rel, child.name)
+                continue
+            if isinstance(child, ast.ImportFrom) and any(
+                (child.module, a.name) in banned for a in child.names
+            ):
+                found.append(f"{rel}:{child.lineno} imports from {child.module}")
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and isinstance(child.func.value, ast.Name)
+                and (child.func.value.id, child.func.attr) in banned
+                and (rel, func) not in allowed
+            ):
+                found.append(f"{rel}:{child.lineno} in {func}")
+            visit(child, rel, func)
+
+    for f in sorted(root.rglob("*.py")):
+        rel = f.relative_to(root).as_posix()
+        if rel != "committer.py":
+            visit(ast.parse(f.read_text()), rel, None)
+    assert not found, f"rename outside committer.py: {found}"
