@@ -3,9 +3,10 @@ engine, and the one place that publishes a replaced parquet directory.
 
 Every piece of metadata that makes state visible -- the IVM ledgers
 (`operators/ivm.py`), the incremental-table manifest
-(`sources/incremental.py`), the streaming epoch ledger, the index stats
-and layout sidecars (`streaming/pipeline.py`, `operators/text.py`,
-`operators/dedup.py`, `operators/similarity.py`) -- commits through
+(`sources/incremental.py`), the streaming epoch ledger, the at-rest
+index sidecars (``_minhash_stats.json``, ``_winnow_stats.json``,
+``_postings_stats.json``, ``_ivf_centroids.json``, ``_ivfpq_meta.json``;
+all through `sources/bucketed_index.py`) -- commits through
 this module instead of hand-rolled ``tmp + os.replace``. That buys two
 things the scattered call sites could not give:
 
@@ -216,26 +217,24 @@ def set_default_committer(committer: JsonCommitter) -> None:
 @contextmanager
 def maintenance_lock(path: str, *, exclusive: bool):
     """Advisory reader/maintainer barrier for an ON-DISK index layout,
-    via ``flock`` on a dedicated ``<path>/_maintenance.lock`` sidecar
-    (NOT a ledger's ``.lock`` CAS sidecar, so holding this never
-    deadlocks a guarded ``commit_json`` issued while it is held).
+    via ``flock`` on a dedicated ``.<name>.maintenance.lock`` file BESIDE
+    the directory ``path`` (NOT a ledger's ``.lock`` CAS sidecar, so
+    holding this never deadlocks a guarded ``commit_json`` issued while
+    it is held). The lock neither lives in nor creates ``path``: when a
+    crash inside :func:`replace_dir` has left only ``<path>.old``, taking
+    the lock must not conjure an empty ``path`` that :func:`restore_dir`
+    would then mistake for a committed swap (and delete ``.old``).
 
-    Protocol: **appenders take the SHARED lock** for the whole
-    data-write + stats-commit span (concurrent appends still proceed in
-    parallel; their stats CAS serializes only the ledger swap, as
-    before); **destructive maintenance (compaction / rebuild) takes the
-    EXCLUSIVE lock** for its whole read → rewrite → swap → commit span.
-    That makes the ADVICE-r9 race impossible: a part file written by an
-    in-flight append can no longer land between compaction's dedup read
-    and its directory swap (and so can no longer be silently deleted).
-
-    Same scope/limits as the CAS sidecar above: one host / one POSIX
-    filesystem. On an object store, swap this for the store's lease or
-    lock-table primitive along with :class:`JsonCommitter`.
+    Appenders take it SHARED, destructive maintenance (compaction,
+    rebuild) EXCLUSIVE; the protocol is in
+    ``sources/bucketed_index.py``. Same scope/limits as the CAS sidecar
+    above: one host / one POSIX filesystem. On an object store, swap
+    this for the store's lease or lock-table primitive along with
+    :class:`JsonCommitter`.
     """
-    os.makedirs(path, exist_ok=True)
-    lock_path = os.path.join(path, "_maintenance.lock")
-    with open(lock_path, "a+") as lock:
+    parent, name = os.path.split(os.path.abspath(path))
+    os.makedirs(parent, exist_ok=True)
+    with open(os.path.join(parent, f".{name}.maintenance.lock"), "a+") as lock:
         fcntl.flock(lock, fcntl.LOCK_EX if exclusive else fcntl.LOCK_SH)
         try:
             yield

@@ -41,30 +41,7 @@ from ..functions.xhash import (
     word_shingles,
     ws_tokens,
 )
-
-
-def _finalize(result: DataFrame, cached: list[DataFrame], unpersist_after: bool) -> DataFrame:
-    """Release operator-internal caches without breaking the result.
-
-    The pair operators persist their shingle/signature frames because two
-    plan branches (candidate generation + verification) read them. With
-    ``unpersist_after=True`` (the library default) the result -- bounded
-    by the true near-dup pair count, never corpus-sized -- is materialized
-    with an eager localCheckpoint, which cuts its lineage to the cached
-    subplans, and the caches are dropped immediately: repeated calls in a
-    long-lived session leave no dead blocks behind (PERF.md documents
-    6-16 s heap-aging swings from exactly that). Pass
-    ``unpersist_after=False`` to get the fully lazy plan instead (the
-    registry queries do -- the plan-lint sweep must see the join strategy,
-    and the bench harness resets block state itself); the caller then owns
-    the persisted frames for the life of the returned plan.
-    """
-    if not unpersist_after:
-        return result
-    out = result.localCheckpoint(eager=True)
-    for c in cached:
-        c.unpersist()
-    return out
+from ..sources.bucketed_index import BucketedIndex, release
 
 
 def _jaccard_micro_cols(common, sz_a, sz_b, threshold: float):
@@ -230,7 +207,7 @@ def ngram_jaccard_pairs(
         .filter(keep)
         .select("doc_a", "doc_b", jac.alias("jaccard"))
     )
-    return _finalize(verified, [sets], unpersist_after)
+    return release(verified, [sets], unpersist_after)
 
 
 def minhash_lsh_pairs(
@@ -316,7 +293,7 @@ def minhash_lsh_pairs(
         .filter(keep)
         .select("doc_a", "doc_b", jac.alias("jaccard"))
     )
-    return _finalize(verified, [sets], unpersist_after)
+    return release(verified, [sets], unpersist_after)
 
 
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 16) -> DataFrame:
@@ -389,7 +366,7 @@ def simhash_multiprobe_pairs(
         )
         .distinct()
     )
-    return _finalize(pairs, [sk], unpersist_after)
+    return release(pairs, [sk], unpersist_after)
 
 
 def duplicate_clusters(
@@ -573,14 +550,6 @@ def minhash_novel(
     assert k % band_size == 0
     n_bands = k // band_size
 
-    def prep(df: DataFrame) -> DataFrame:
-        return shingle_sets(df, text_col, id_col, n).select(
-            "doc_id",
-            minhash_signature(F.col("sh"), k=k).alias("sig"),
-            F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("shh"),
-            F.size("sh").alias("sz"),
-        )
-
     def bands(sets: DataFrame) -> DataFrame:
         return sets.select(
             "doc_id",
@@ -600,14 +569,16 @@ def minhash_novel(
             ).alias("key"),
         )
 
-    new_sets = prep(new_df).persist(StorageLevel.MEMORY_AND_DISK)
+    new_sets = _minhash_prep(new_df, text_col, id_col, n, k).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     new_sets.count()  # eager fill (see ngram_jaccard_pairs)
     # the corpus shingle/signature pass feeds BOTH joins (band index +
     # verify); persist it instead of recomputing the corpus scan twice --
     # but only when this call owns the cache lifecycle (eager mode).
     # In lazy mode a persist would outlive the call with no release point,
     # so the recompute is the lesser cost there.
-    corpus_sets = prep(corpus_df)
+    corpus_sets = _minhash_prep(corpus_df, text_col, id_col, n, k)
     caches = [new_sets]
     if unpersist_after:
         corpus_sets = corpus_sets.persist(StorageLevel.MEMORY_AND_DISK)
@@ -620,32 +591,12 @@ def minhash_novel(
         .select("new_id", "corpus_id")
         .distinct()
     )
-    sa = new_sets.select(
-        F.col("doc_id").alias("new_id"),
-        F.col("shh").alias("sh_a"),
-        F.col("sz").alias("sz_a"),
-    )
-    sb = corpus_sets.select(
-        F.col("doc_id").alias("corpus_id"),
-        F.col("shh").alias("sh_b"),
-        F.col("sz").alias("sz_b"),
-    )
-    _, keep = _jaccard_micro_cols(
-        F.col("common"), F.col("sz_a"), F.col("sz_b"), threshold
-    )
-    dup_ids = (
-        cand.join(sa, "new_id")
-        .join(sb, "corpus_id")
-        .withColumn("common", F.size(F.array_intersect("sh_a", "sh_b")))
-        .filter(keep)
-        .select(F.col("new_id").alias("doc_id"))
-        .distinct()
-    )
+    dup_ids = _verified_dup_ids(cand, new_sets, corpus_sets, threshold)
     # finalize on dup_ids (bounded by |batch|), NOT on the batch-sized
     # anti-join result: the checkpoint materializes only the duplicate id
     # set, then both caches are released before the caller ever runs the
     # returned plan
-    dup_ids = _finalize(dup_ids, caches, unpersist_after)
+    dup_ids = release(dup_ids, caches, unpersist_after)
     return new_df.join(
         dup_ids.withColumnRenamed("doc_id", id_col), id_col, "left_anti"
     )
@@ -661,6 +612,33 @@ def _minhash_prep(df: DataFrame, text_col: str, id_col: str, n: int, k: int):
         minhash_signature(F.col("sh"), k=k).alias("sig"),
         F.transform(F.col("sh"), lambda s: F.xxhash64(s)).alias("shh"),
         F.size("sh").alias("sz"),
+    )
+
+
+def _verified_dup_ids(
+    cand: DataFrame, new_sets: DataFrame, corpus_sets: DataFrame, threshold: float
+) -> DataFrame:
+    """``doc_id`` of every candidate's new side whose pair (new_id,
+    corpus_id) is at exact Jaccard >= ``threshold``; both set frames are
+    :func:`_minhash_prep`-shaped (doc_id, shh, sz)."""
+
+    def side(sets, id_name, s):
+        return sets.select(
+            F.col("doc_id").alias(id_name),
+            F.col("shh").alias(f"sh_{s}"),
+            F.col("sz").alias(f"sz_{s}"),
+        )
+
+    _, keep = _jaccard_micro_cols(
+        F.col("common"), F.col("sz_a"), F.col("sz_b"), threshold
+    )
+    return (
+        cand.join(side(new_sets, "new_id", "a"), "new_id")
+        .join(side(corpus_sets, "corpus_id", "b"), "corpus_id")
+        .withColumn("common", F.size(F.array_intersect("sh_a", "sh_b")))
+        .filter(keep)
+        .select(F.col("new_id").alias("doc_id"))
+        .distinct()
     )
 
 
@@ -706,6 +684,13 @@ def _set_bucket(id_col_expr, n_buckets: int):
     return F.pmod(F.xxhash64(id_col_expr), F.lit(n_buckets)).cast("int")
 
 
+def _minhash_index(path: str) -> BucketedIndex:
+    return BucketedIndex(
+        path, "_minhash_stats.json", "minhash index", "write_minhash_index",
+        subdirs=("sets", "bands"), layout=("n", "k", "band_size", "n_buckets"),
+    )
+
+
 def write_minhash_index(
     df: DataFrame,
     path: str,
@@ -721,73 +706,54 @@ def write_minhash_index(
     :func:`~..operators.text.write_posting_index` (terms).
 
     Layout (two Hive-partitioned parquet subdirs + a stats sidecar):
-      ``bands/bucket=<pmod(xxhash64(band, slice), n_buckets)>/`` ->
-        (doc_id, band, bkeys) -- the banded signature slices that
-        generate candidates;
       ``sets/bucket=<pmod(xxhash64(doc_id), n_buckets)>/`` ->
         (doc_id, shh, sz) -- the xxhash64'd shingle sets that pay the
         EXACT-Jaccard verify (banding generates candidates, it never
         decides duplicates);
-      ``_minhash_stats.json`` -> layout params + n_docs (committer
-        seam, like the posting index).
+      ``bands/bucket=<pmod(xxhash64(band, slice), n_buckets)>/`` ->
+        (doc_id, band, bkeys) -- the banded signature slices that
+        generate candidates;
+      ``_minhash_stats.json`` -> layout params + n_docs.
 
-    A probe (:func:`minhash_novel_indexed`) partition-prunes BOTH reads
-    to the buckets its batch actually hits: at rest, near-dup screening
-    of a batch against a 100 TB corpus reads ~|batch bands|/n_buckets of
-    the band index and only the candidate docs' verify payloads --
-    never a corpus scan. Per-doc rows are pure functions of content, so
-    :func:`append_minhash_index` is rebuild-equivalent by construction.
+    Crash order is sets before bands: a torn write leaves verify
+    payloads without band rows (the batch is simply not indexed yet),
+    never band rows whose candidates cannot be verified. A probe
+    (:func:`minhash_novel_indexed`) partition-prunes BOTH reads to the
+    buckets its batch actually hits: at rest, near-dup screening of a
+    batch against a 100 TB corpus reads ~|batch bands|/n_buckets of the
+    band index and only the candidate docs' verify payloads -- never a
+    corpus scan. The index protocol is in ``sources/bucketed_index.py``.
     """
-    import os
-
-    from ..committer import commit_json
-
     assert k % band_size == 0
-    n_docs = _write_minhash_rows(df, path, "overwrite", n, k, band_size,
-                                 n_buckets, text_col, id_col)
-    commit_json(
-        os.path.join(path, "_minhash_stats.json"),
-        {
-            "n": n, "k": k, "band_size": band_size, "n_buckets": n_buckets,
-            "n_docs": n_docs,
-        },
+    index = _minhash_index(path)
+    stats = {"n": n, "k": k, "band_size": band_size, "n_buckets": n_buckets}
+    stats["n_docs"] = _write_minhash_rows(
+        index, df, "overwrite", stats, text_col, id_col
     )
+    index.commit(stats)
 
 
-def _write_minhash_rows(
-    df, path, mode, n, k, band_size, n_buckets, text_col, id_col
-) -> int:
+def _write_minhash_rows(index, df, mode, stats, text_col, id_col) -> int:
     """Shared build/append data path: ONE shingle/signature pass (the
     per-doc payload is persisted and feeds both writes plus the row
-    count), each write repartitioned on its bucket column so every batch
-    lands as ~1 file per bucket -- bounded file counts however many
-    appends accumulate. sets FIRST, bands second: a crash between the
-    writes leaves verify payloads without band rows (the batch is simply
-    not indexed yet), never band rows whose candidates cannot be
-    verified (silent misses). Returns the batch row count."""
-    import os
-
-    sets = _minhash_prep(df, text_col, id_col, n, k).persist(
+    count). Returns the batch row count."""
+    k, n_buckets = stats["k"], stats["n_buckets"]
+    sets = _minhash_prep(df, text_col, id_col, stats["n"], k).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     try:
         n_docs = sets.count()  # eager fill; also the stats delta
-        (
-            sets.select(
-                "doc_id", "shh", "sz",
-                _set_bucket(F.col("doc_id"), n_buckets).alias("bucket"),
-            )
-            .repartition(F.col("bucket"))
-            .write.mode(mode)
-            .partitionBy("bucket")
-            .parquet(os.path.join(path, "sets"))
-        )
-        (
-            _minhash_band_rows(sets, k, band_size, n_buckets)
-            .repartition(F.col("bucket"))
-            .write.mode(mode)
-            .partitionBy("bucket")
-            .parquet(os.path.join(path, "bands"))
+        index.write(
+            {
+                "sets": sets.select(
+                    "doc_id", "shh", "sz",
+                    _set_bucket(F.col("doc_id"), n_buckets).alias("bucket"),
+                ),
+                "bands": _minhash_band_rows(
+                    sets, k, stats["band_size"], n_buckets
+                ),
+            },
+            mode,
         )
     finally:
         sets.unpersist()
@@ -804,72 +770,20 @@ def append_minhash_index(
     """O(|batch|) growth of a :func:`write_minhash_index` layout: the
     batch's verify payloads and band rows append into the same buckets
     (index rows are pure per-doc functions, so probe results are
-    IDENTICAL to an index rebuilt over the union -- pinned by test), and
-    n_docs advances through the same commuting-delta CAS retry as
-    ``append_posting_index``.
+    IDENTICAL to an index rebuilt over the union -- pinned by test).
 
-    Crash safety: sets append before bands append (see
-    :func:`write_minhash_index`); a torn append degrades to "batch not
-    yet indexed", and RE-appending the same batch is probe-safe (band
-    candidates are ``distinct``-ed and duplicate verify rows collapse in
-    the dup-id distinct) at the cost of double-counted n_docs and dead
-    storage -- compact by rebuilding. Contract: append-only growth;
-    dedup re-ingested doc_ids upstream.
-
-    Concurrency: the whole data-write + stats-commit span holds the
-    index's SHARED maintenance lock (``committer.maintenance_lock``),
-    so concurrent appenders still run in parallel (their stats CAS
-    serializes only the ledger swap) but an append can never interleave
-    with :func:`compact_minhash_index`'s destructive swap -- the
-    ADVICE-r9 lost-part-file race. A subdir swap a crash interrupted is
-    rolled back (``committer.restore_dir``) before anything is appended.
+    A torn append degrades to "batch not yet indexed", and RE-appending
+    the same batch is probe-safe (band candidates are ``distinct``-ed
+    and duplicate verify rows collapse in the dup-id distinct) at the
+    cost of double-counted n_docs and dead storage -- see
+    :func:`compact_minhash_index`. Contract: append-only growth; dedup
+    re-ingested doc_ids upstream.
     """
-    import os
-
-    from ..committer import fold_stats, load_json, maintenance_lock, restore_dir
-
-    stats_path = os.path.join(path, "_minhash_stats.json")
-    with maintenance_lock(path, exclusive=False):
-        stats, tok = load_json(stats_path)
-        if stats is None:
-            raise FileNotFoundError(
-                f"no minhash index at {path}: build one with "
-                "write_minhash_index before appending"
-            )
-        for sub in ("sets", "bands"):
-            restore_dir(os.path.join(path, sub))
-        delta = _write_minhash_rows(
-            batch, path, "append", stats["n"], stats["k"], stats["band_size"],
-            stats["n_buckets"], text_col, id_col,
+    index = _minhash_index(path)
+    with index.appending(cas_retries) as (stats, delta):
+        delta["n_docs"] = _write_minhash_rows(
+            index, batch, "append", stats, text_col, id_col
         )
-        fold_stats(
-            stats_path, stats, tok, {"n_docs": delta},
-            layout=("n", "k", "band_size", "n_buckets"),
-            retries=cas_retries, what="minhash index",
-        )
-
-
-def _compact_bucketed(spark, d: str, count_docs: bool = True):
-    """Distinct-dedup one bucket-partitioned index subdir and swap it in
-    with :func:`..committer.replace_dir`. Returns ``(rows removed,
-    distinct doc_ids kept or None)``. Callers hold the EXCLUSIVE
-    maintenance lock."""
-    from ..committer import live_dir, replace_dir
-
-    before = spark.read.parquet(live_dir(d))
-    n_before = before.count()
-
-    def write(staging):
-        before.distinct().repartition(F.col("bucket")).write.partitionBy(
-            "bucket"
-        ).parquet(staging)
-        after = spark.read.parquet(staging)
-        docs = after.select("doc_id").distinct().count() if count_docs else None
-        return after.count(), docs
-
-    n_after, n_docs = replace_dir(d, write)
-    spark.catalog.refreshByPath(d)
-    return n_before - n_after, n_docs
 
 
 def compact_minhash_index(spark, path: str) -> dict:
@@ -881,60 +795,22 @@ def compact_minhash_index(spark, path: str) -> dict:
 
     Probe results are untouched BY CONSTRUCTION: duplicate band rows
     only re-emit candidates that ``distinct()`` collapses, and duplicate
-    set rows collapse in the dup-id distinct -- compaction removes
-    exactly the rows that could never change an answer. Each subdir is
-    swapped by :func:`..committer.replace_dir`: readers never observe a
-    half-compacted subdir, and the ordering (sets swapped before bands)
-    keeps the mid-crash state probe-safe for the same reason appends
-    write sets first. Returns
+    set rows collapse in the dup-id distinct. Sets are swapped before
+    bands, which keeps a mid-crash state probe-safe for the same reason
+    appends write sets first. Returns
     ``{"n_docs": ..., "set_rows_removed": ..., "band_rows_removed": ...}``.
-
-    Concurrency: the whole read → dedup → swap → commit span holds the
-    index's EXCLUSIVE maintenance lock, so an in-flight
-    :func:`append_minhash_index` (SHARED holder) can never land part
-    files between the dedup read and the directory swap -- part files
-    are either in the read (and survive, deduped) or the append blocks
-    until the swap is published. The stats reload happens INSIDE the
-    lock (fail-fast: a concurrent rebuild that changed the layout
-    raises before any rename). The rename pair itself is not observable
-    by lock holders, but a LOCKLESS reader racing the two renames can
-    still see the subdir missing for a moment -- run compaction in a
-    maintenance window, or route hot probes through
-    ``minhash_novel_indexed`` retried on ``FileNotFoundError``.
 
     DataFrame invalidation: compaction replaces the parquet files, so
     any LIVE lazy DataFrame previously read from ``{path}/sets`` or
     ``{path}/bands`` will fail on next materialization
-    (FILE_NOT_EXIST). This function calls
-    ``spark.catalog.refreshByPath`` on both subdirs to drop cached
-    listings/data for FUTURE reads, but already-constructed plans pin
-    their file list -- re-read after compacting.
+    (FILE_NOT_EXIST); re-read after compacting.
     """
-    import os
-
-    from ..committer import commit_json, load_json, maintenance_lock
-
-    stats_path = os.path.join(path, "_minhash_stats.json")
-    removed = {}
-    with maintenance_lock(path, exclusive=True):
-        # load INSIDE the lock: the CAS token is taken after every
-        # possible concurrent append has drained, so the final commit
-        # can only conflict with an out-of-protocol writer -- and that
-        # conflict surfaces before it can be half-applied (fail fast on
-        # layout checks here, commit guarded below).
-        stats, tok = load_json(stats_path)
-        if stats is None:
-            raise FileNotFoundError(f"no minhash index at {path}")
-        # sets first: crash ordering; n_docs counts the deduped sets
-        removed["set_rows_removed"], n_docs = _compact_bucketed(
-            spark, os.path.join(path, "sets")
-        )
-        removed["band_rows_removed"], _ = _compact_bucketed(
-            spark, os.path.join(path, "bands"), count_docs=False
-        )
-        stats["n_docs"] = n_docs
-        commit_json(stats_path, stats, expect=tok)
-    return {"n_docs": n_docs, **removed}
+    n_docs, removed = _minhash_index(path).compact(spark)
+    return {
+        "n_docs": n_docs,
+        "set_rows_removed": removed["sets"],
+        "band_rows_removed": removed["bands"],
+    }
 
 
 def minhash_novel_indexed(
@@ -957,35 +833,22 @@ def minhash_novel_indexed(
 
     Per-batch cost: O(|batch| * bands) probe rows against the pruned
     band buckets + exact verify of candidates only; two bounded driver
-    actions (<= n_buckets ints each) turn the probed bucket sets into
-    static partition filters, the same shape as ``ivf_topk_indexed``.
+    actions turn the probed bucket sets into static partition filters.
     """
-    import os
+    index = _minhash_index(path)
+    stats, _ = index.load()
+    k, n_buckets = stats["k"], stats["n_buckets"]
 
-    from ..committer import load_json
-
-    stats, _ = load_json(os.path.join(path, "_minhash_stats.json"))
-    if stats is None:
-        raise FileNotFoundError(f"no minhash index at {path}")
-    n, k = stats["n"], stats["k"]
-    band_size, n_buckets = stats["band_size"], stats["n_buckets"]
-
-    new_sets = _minhash_prep(batch, text_col, id_col, n, k).persist(
+    new_sets = _minhash_prep(batch, text_col, id_col, stats["n"], k).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     caches = [new_sets]
-    new_bands = _minhash_band_rows(new_sets, k, band_size, n_buckets)
+    new_bands = _minhash_band_rows(new_sets, k, stats["band_size"], n_buckets)
     # the probed-bucket collect doubles as the persist's eager fill --
     # the downstream actions here are strictly sequential, so the first
-    # action materializes the cache and no recompute race exists (the
-    # extra count() the pair ops need is one whole job saved per probe)
-    probed = sorted(
-        r["bucket"] for r in new_bands.select("bucket").distinct().collect()
-    )
-    idx_bands = (
-        spark.read.parquet(os.path.join(path, "bands"))
-        .filter(F.col("bucket").isin(probed))
-        .select(F.col("doc_id").alias("corpus_id"), "band", "bkeys")
+    # action materializes the cache and no recompute race exists
+    idx_bands = index.read(spark, index.probed(new_bands), "bands").select(
+        F.col("doc_id").alias("corpus_id"), "band", "bkeys"
     )
     cand = (
         new_bands.select(
@@ -998,38 +861,14 @@ def minhash_novel_indexed(
     if unpersist_after:
         cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
         caches.append(cand)
-    cand_buckets = sorted(
-        r["b"]
-        for r in cand.select(
-            _set_bucket(F.col("corpus_id"), n_buckets).alias("b")
-        ).distinct().collect()
+    cand_buckets = index.probed(
+        cand.select(_set_bucket(F.col("corpus_id"), n_buckets).alias("bucket"))
     )
-    idx_sets = (
-        spark.read.parquet(os.path.join(path, "sets"))
-        .filter(F.col("bucket").isin(cand_buckets))
-        .select(
-            F.col("doc_id").alias("corpus_id"),
-            F.col("shh").alias("sh_b"),
-            F.col("sz").alias("sz_b"),
-        )
+    idx_sets = index.read(spark, cand_buckets, "sets")
+    dup_ids = release(
+        _verified_dup_ids(cand, new_sets, idx_sets, threshold),
+        caches, unpersist_after,
     )
-    sa = new_sets.select(
-        F.col("doc_id").alias("new_id"),
-        F.col("shh").alias("sh_a"),
-        F.col("sz").alias("sz_a"),
-    )
-    _, keep = _jaccard_micro_cols(
-        F.col("common"), F.col("sz_a"), F.col("sz_b"), threshold
-    )
-    dup_ids = (
-        cand.join(sa, "new_id")
-        .join(idx_sets, "corpus_id")
-        .withColumn("common", F.size(F.array_intersect("sh_a", "sh_b")))
-        .filter(keep)
-        .select(F.col("new_id").alias("doc_id"))
-        .distinct()
-    )
-    dup_ids = _finalize(dup_ids, caches, unpersist_after)
     return batch.join(
         dup_ids.withColumnRenamed("doc_id", id_col), id_col, "left_anti"
     )
@@ -1198,7 +1037,7 @@ def containment_pairs(
             ).alias("containment"),
         )
     )
-    return _finalize(verified, [sets], unpersist_after)
+    return release(verified, [sets], unpersist_after)
 
 
 def exact_substring_dedup(
@@ -1630,6 +1469,13 @@ def _winnow_fp_rows(
     )
 
 
+def _winnow_index(path: str) -> BucketedIndex:
+    return BucketedIndex(
+        path, "_winnow_stats.json", "winnow index", "write_winnow_index",
+        subdirs=("fps",), layout=("k", "window", "n_buckets"),
+    )
+
+
 def write_winnow_index(
     df: DataFrame,
     path: str,
@@ -1642,33 +1488,29 @@ def write_winnow_index(
     """Persist an at-rest winnowing-fingerprint index -- the
     MOSS/locality twin of :func:`write_minhash_index`: one Hive-
     partitioned parquet subdir ``fps/bucket=<pmod(xxhash64(fp_hash),
-    n_buckets)>/`` of (doc_id, fp_hash) postings + a stats sidecar
-    (committer seam). Fingerprint rows are pure per-doc content
-    functions, so appends are rebuild-equivalent by construction; a
-    probe prunes its read to the buckets its batch's fingerprints hash
-    into, and because the bucket is a function of the HASH, the pruned
-    read carries each probed hash's complete posting list -- index-side
-    document frequencies (the boilerplate cap) stay exact.
+    n_buckets)>/`` of (doc_id, fp_hash) postings + a
+    ``_winnow_stats.json`` sidecar (k, window, n_buckets, n_docs).
+    Fingerprint rows are pure per-doc content functions, so appends are
+    rebuild-equivalent by construction; a probe prunes its read to the
+    buckets its batch's fingerprints hash into, and because the bucket
+    is a function of the HASH, the pruned read carries each probed
+    hash's complete posting list -- index-side document frequencies
+    (the boilerplate cap) stay exact.
     """
-    import os
+    index = _winnow_index(path)
+    stats = {"k": k, "window": window, "n_buckets": n_buckets}
+    stats["n_docs"] = _write_winnow_rows(
+        index, df, "overwrite", stats, text_col, id_col
+    )
+    index.commit(stats)
 
-    from ..committer import commit_json
 
-    rows = _winnow_fp_rows(df, k, window, n_buckets, text_col, id_col)
+def _write_winnow_rows(index, df, mode, stats, text_col, id_col) -> int:
+    rows = _winnow_fp_rows(df, stats["k"], stats["window"],
+                           stats["n_buckets"], text_col, id_col)
     n_docs = rows.select("doc_id").distinct().count()
-    (
-        rows.repartition(F.col("bucket"))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, "fps"))
-    )
-    commit_json(
-        os.path.join(path, "_winnow_stats.json"),
-        {
-            "k": k, "window": window, "n_buckets": n_buckets,
-            "n_docs": n_docs,
-        },
-    )
+    index.write({"fps": rows}, mode)
+    return n_docs
 
 
 def append_winnow_index(
@@ -1678,41 +1520,16 @@ def append_winnow_index(
     id_col: str = "doc_id",
     cas_retries: int = 8,
 ) -> None:
-    """O(|batch|) growth of a :func:`write_winnow_index` layout --
-    the append_minhash_index protocol: data rows append into the same
-    buckets (~1 file per bucket per batch), n_docs advances through the
-    commuting-delta CAS retry, the whole span holds the SHARED
-    maintenance lock. Re-appending a batch is probe-safe (the probe
-    counts DISTINCT fingerprints per pair and DISTINCT doc ids per
-    frequency) at the cost of dead storage + double-counted n_docs.
+    """O(|batch|) growth of a :func:`write_winnow_index` layout: data
+    rows append into the same buckets (~1 file per bucket per batch).
+    Re-appending a batch is probe-safe (the probe counts DISTINCT
+    fingerprints per pair and DISTINCT doc ids per frequency) at the
+    cost of dead storage + double-counted n_docs.
     """
-    import os
-
-    from ..committer import fold_stats, load_json, maintenance_lock, restore_dir
-
-    stats_path = os.path.join(path, "_winnow_stats.json")
-    with maintenance_lock(path, exclusive=False):
-        stats, tok = load_json(stats_path)
-        if stats is None:
-            raise FileNotFoundError(
-                f"no winnow index at {path}: build one with "
-                "write_winnow_index before appending"
-            )
-        fps = os.path.join(path, "fps")
-        restore_dir(fps)
-        rows = _winnow_fp_rows(batch, stats["k"], stats["window"],
-                               stats["n_buckets"], text_col, id_col)
-        delta = rows.select("doc_id").distinct().count()
-        (
-            rows.repartition(F.col("bucket"))
-            .write.mode("append")
-            .partitionBy("bucket")
-            .parquet(fps)
-        )
-        fold_stats(
-            stats_path, stats, tok, {"n_docs": delta},
-            layout=("k", "window", "n_buckets"),
-            retries=cas_retries, what="winnow index",
+    index = _winnow_index(path)
+    with index.appending(cas_retries) as (stats, delta):
+        delta["n_docs"] = _write_winnow_rows(
+            index, batch, "append", stats, text_col, id_col
         )
 
 
@@ -1736,51 +1553,33 @@ def winnow_novel_indexed(
     which is still the hash's complete global posting list (bucket is a
     function of the hash), so the result is value-identical to a full
     recompute over index ∪ batch. Per-batch cost: O(|batch|
-    fingerprints) probe rows + ONE pruned index read (<= n_buckets
-    driver ints -> static partition filter) + pair-keyed counts --
-    never a corpus scan.
+    fingerprints) probe rows + ONE pruned index read + pair-keyed
+    counts -- never a corpus scan. Nothing is cached: the batch's
+    fingerprints are computed twice (bucket collect, then the join),
+    which costs O(|batch|) and leaves no block behind per call.
     """
-    import os
-
-    from ..committer import load_json
-
-    stats, _ = load_json(os.path.join(path, "_winnow_stats.json"))
-    if stats is None:
-        raise FileNotFoundError(f"no winnow index at {path}")
-    k, window = stats["k"], stats["window"]
-    n_buckets = stats["n_buckets"]
-
+    index = _winnow_index(path)
+    stats, _ = index.load()
     new_fps = _winnow_fp_rows(
-        batch, k, window, n_buckets, text_col, id_col
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        probed = sorted(
-            r["bucket"]
-            for r in new_fps.select("bucket").distinct().collect()
-        )
-        idx = (
-            spark.read.parquet(os.path.join(path, "fps"))
-            .filter(F.col("bucket").isin(probed))
-            .select(F.col("doc_id").alias("corpus_id"), "fp_hash")
-        )
-        cdf = idx.groupBy("fp_hash").agg(
-            F.countDistinct("corpus_id").alias("_df")
-        )
-        kept = idx.join(cdf.filter(F.col("_df") <= max_df), "fp_hash")
-        dup_ids = (
-            new_fps.select(F.col("doc_id").alias("new_id"), "fp_hash")
-            .join(kept, "fp_hash")
-            .groupBy("new_id", "corpus_id")
-            .agg(F.countDistinct("fp_hash").alias("_n_shared"))
-            .filter(F.col("_n_shared") >= min_shared)
-            .select(F.col("new_id").alias(id_col))
-            .distinct()
-        )
-        return batch.join(dup_ids, id_col, "left_anti")
-    finally:
-        # lazy plans hold the persist; eager fill happened at the
-        # probed-bucket collect, and the caller's single action drains it
-        pass
+        batch, stats["k"], stats["window"], stats["n_buckets"], text_col, id_col
+    )
+    idx = index.read(spark, index.probed(new_fps), "fps").select(
+        F.col("doc_id").alias("corpus_id"), "fp_hash"
+    )
+    cdf = idx.groupBy("fp_hash").agg(
+        F.countDistinct("corpus_id").alias("_df")
+    )
+    kept = idx.join(cdf.filter(F.col("_df") <= max_df), "fp_hash")
+    dup_ids = (
+        new_fps.select(F.col("doc_id").alias("new_id"), "fp_hash")
+        .join(kept, "fp_hash")
+        .groupBy("new_id", "corpus_id")
+        .agg(F.countDistinct("fp_hash").alias("_n_shared"))
+        .filter(F.col("_n_shared") >= min_shared)
+        .select(F.col("new_id").alias(id_col))
+        .distinct()
+    )
+    return batch.join(dup_ids, id_col, "left_anti")
 
 
 def winnow_novel_oracle_sql(
@@ -1829,30 +1628,16 @@ WHERE ({batch_sql}) AND doc_id NOT IN (SELECT new_id FROM dup)
 
 
 def compact_winnow_index(spark, path: str) -> dict:
-    """In-place maintenance for a :func:`write_winnow_index` layout --
-    the compact_minhash_index protocol applied to the single ``fps``
-    subdir: distinct-dedup the postings (duplicates only exist after
+    """In-place maintenance for a :func:`write_winnow_index` layout:
+    distinct-dedup the ``fps`` postings (duplicates only exist after
     re-appended batches; the probe's DISTINCT counts made them harmless
-    but they are dead storage), reset ``n_docs`` to the true distinct
-    count, swap via :func:`..committer.replace_dir` under the EXCLUSIVE
-    maintenance lock (appends hold it SHARED, so no in-flight part file
-    can be dropped). Probe results are untouched BY CONSTRUCTION -- compaction
+    but they are dead storage) and reset ``n_docs`` to the true distinct
+    count. Probe results are untouched BY CONSTRUCTION -- compaction
     removes exactly the rows the probe's distincts already collapse.
     Returns ``{"n_docs": ..., "fp_rows_removed": ...}``.
     """
-    import os
-
-    from ..committer import commit_json, load_json, maintenance_lock
-
-    stats_path = os.path.join(path, "_winnow_stats.json")
-    with maintenance_lock(path, exclusive=True):
-        stats, tok = load_json(stats_path)
-        if stats is None:
-            raise FileNotFoundError(f"no winnow index at {path}")
-        removed, n_docs = _compact_bucketed(spark, os.path.join(path, "fps"))
-        stats["n_docs"] = n_docs
-        commit_json(stats_path, stats, expect=tok)
-    return {"n_docs": n_docs, "fp_rows_removed": removed}
+    n_docs, removed = _winnow_index(path).compact(spark)
+    return {"n_docs": n_docs, "fp_rows_removed": removed["fps"]}
 
 
 def temporal_novelty(

@@ -34,6 +34,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..sources.bucketed_index import BucketedIndex
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -334,6 +336,26 @@ def _nearest_cells(vec: Column, cent_lits: list[Column], nc: int) -> Column:
     return F.transform(top, lambda t: t["cell"])
 
 
+def _cell_of(vec: Column, centroids: list[list[float]]) -> Column:
+    """The IVF cell of ``vec``: its nearest centroid's id."""
+    return _nearest_cells(_to_double(vec), _centroid_literals(centroids), 1)[0]
+
+
+def _rank_pairs(pairs: DataFrame, k: int) -> DataFrame:
+    """Top-``k`` per query over (query_id, q_vec, neighbor_id, c_vec)
+    candidate pairs: self-matches excluded, ranked on round(cos, 6) desc
+    with neighbor_id as the deterministic tie-break."""
+    scored = pairs.filter(F.col("neighbor_id") != F.col("query_id")).withColumn(
+        "cos_sim", F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6)
+    )
+    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    )
+
+
 def kmeans_centroids(
     corpus: DataFrame,
     n_centroids: int = 16,
@@ -515,18 +537,11 @@ def ivf_topk(
         F.col(vec_col).alias("q_vec"),
         F.explode(_nearest_cells(F.col(vec_col), cent_lits, n_probe)).alias("cell"),
     )
-    scored = (
+    return _rank_pairs(
         corpus_cells.withColumnRenamed(id_col, "neighbor_id")
         .withColumnRenamed(vec_col, "c_vec")
-        .join(F.broadcast(query_cells), on="cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+        .join(F.broadcast(query_cells), on="cell"),
+        k,
     )
 
 
@@ -572,31 +587,51 @@ def write_ivf_index(
     cost is one corpus scan + one partitioned write; pass
     ``centroids=kmeans_centroids(...)`` for trained cells.
     """
-    import os
-
-    from ..committer import commit_json
-
     if centroids is None:
         centroids = _hash_sample_centroids(corpus, n_centroids, id_col, vec_col)
-    cell = _nearest_cells(
-        _to_double(F.col(vec_col)), _centroid_literals(centroids), 1
-    )[0]
-    corpus.withColumn("cell", cell).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(path)
-    commit_json(os.path.join(path, "_ivf_centroids.json"), centroids)
+    index = _ivf_index(path)
+    index.write(
+        {"": corpus.withColumn("cell", _cell_of(F.col(vec_col), centroids))},
+        "overwrite",
+    )
+    index.commit(centroids)
     return centroids
+
+
+def _ivf_index(path: str) -> BucketedIndex:
+    return BucketedIndex(
+        path, "_ivf_centroids.json", "IVF index", "write_ivf_index",
+        part="cell", clustered=False,
+    )
 
 
 def read_ivf_centroids(path: str) -> list[list[float]]:
-    import os
+    return _ivf_index(path).load()[0]
 
-    from ..committer import load_json
 
-    centroids, _ = load_json(os.path.join(path, "_ivf_centroids.json"))
-    if centroids is None:
-        raise FileNotFoundError(f"no IVF index at {path}")
-    return centroids
+def _cell_candidates(
+    spark, index: BucketedIndex, centroids, queries: DataFrame, n_probe: int,
+    id_col: str, vec_col: str, *cols: Column,
+) -> DataFrame:
+    """The cell-pruned candidate join of the indexed IVF probes: every
+    query row explodes to its ``n_probe`` nearest cells as (query_id,
+    q_vec, cell), the index read is pruned to those cells, and each
+    indexed row (projected to ``cols``) pairs with every query probing
+    its cell. No self-match filter here: the semantic novelty sink needs
+    a replayed vector to find its own earlier copy."""
+    query_cells = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("q_vec"),
+        F.explode(
+            _nearest_cells(
+                _to_double(F.col(vec_col)), _centroid_literals(centroids), n_probe
+            )
+        ).alias("cell"),
+    )
+    corpus_cells = index.read(spark, index.probed(query_cells)).select(
+        *cols, F.col("cell")
+    )
+    return corpus_cells.join(F.broadcast(query_cells), on="cell")
 
 
 def ivf_topk_indexed(
@@ -618,41 +653,32 @@ def ivf_topk_indexed(
     Identical results to :func:`ivf_topk` with the same centroids; the
     difference is the at-rest scan cost.
     """
-    centroids = read_ivf_centroids(path)
-    cent_lits = _centroid_literals(centroids)
+    index = _ivf_index(path)
+    pairs = _cell_candidates(
+        spark, index, index.load()[0], queries, n_probe, id_col, vec_col,
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"),
+    )
+    return _rank_pairs(pairs, k)
 
-    query_cells = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(
-            _nearest_cells(_to_double(F.col(vec_col)), cent_lits, n_probe)
-        ).alias("cell"),
-    )
-    # bounded driver action: <= n_centroids ints, the price of turning the
-    # probe set into a static partition filter
-    probed = sorted(
-        r["cell"] for r in query_cells.select("cell").distinct().collect()
-    )
-    corpus_cells = (
-        spark.read.parquet(path)
-        .filter(F.col("cell").isin(probed))
-        .select(
-            F.col(id_col).alias("neighbor_id"),
+
+def _ivf_novel_indexed(
+    spark, batch: DataFrame, path: str, threshold: float, n_probe: int,
+    id_col: str, vec_col: str,
+) -> DataFrame:
+    """Rows of ``batch`` with no vector of a :func:`write_ivf_index`
+    index at cosine >= ``threshold`` among their ``n_probe`` nearest
+    cells -- the semantic twin of ``dedup.minhash_novel_indexed``."""
+    index = _ivf_index(path)
+    hits = (
+        _cell_candidates(
+            spark, index, index.load()[0], batch, n_probe, id_col, vec_col,
             F.col(vec_col).alias("c_vec"),
-            F.col("cell"),
         )
+        .filter(cosine(F.col("q_vec"), F.col("c_vec")) >= threshold)
+        .select(F.col("query_id").alias(id_col))
+        .distinct()
     )
-    scored = (
-        corpus_cells.join(F.broadcast(query_cells), on="cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return batch.join(hits, id_col, "left_anti")
 
 
 def _auto_lsh_layout(
@@ -1041,18 +1067,13 @@ def append_ivf_index(
     add files under already-probed directories, so reader pruning is
     unaffected. (File visibility is per-file atomic; a manifest commit a
     la sources/incremental.py would make multi-file appends atomic too.)
-    An interrupted :func:`rebuild_ivf_index` swap is rolled back first.
     """
-    from ..committer import restore_dir
-
-    restore_dir(path)
-    centroids = read_ivf_centroids(path)
-    cell = _nearest_cells(
-        _to_double(F.col(vec_col)), _centroid_literals(centroids), 1
-    )[0]
-    batch.withColumn("cell", cell).write.mode("append").partitionBy(
-        "cell"
-    ).parquet(path)
+    index = _ivf_index(path)
+    with index.appending() as (centroids, _):
+        index.write(
+            {"": batch.withColumn("cell", _cell_of(F.col(vec_col), centroids))},
+            "append",
+        )
 
 
 def hard_negatives(
@@ -1169,17 +1190,12 @@ def rebuild_ivf_index(
     O(batch) between rebuilds, and the rebuild pays one full
     scan + partitioned write to restore cell balance after centroid drift
     -- exactly the delta/compact cost split of ``sources/incremental.py``.
-    The swap is :func:`..committer.replace_dir`: readers never observe a
-    half-built index, and the old index serves reads until the rename.
+    Readers never observe a half-built index: the old one serves reads
+    until the swap.
     """
-    from ..committer import live_dir, replace_dir
-
-    # corpus is lazy over the OLD index's files: replace_dir runs the
-    # write (which consumes them) before it moves any directory
-    corpus = spark.read.parquet(live_dir(path)).select(id_col, vec_col)
-    return replace_dir(path, lambda staging: write_ivf_index(
-        corpus, staging, n_centroids=n_centroids, centroids=centroids,
-        id_col=id_col, vec_col=vec_col,
+    return _ivf_index(path).rebuild(spark, lambda old, staging: write_ivf_index(
+        old.select(id_col, vec_col), staging, n_centroids=n_centroids,
+        centroids=centroids, id_col=id_col, vec_col=vec_col,
     ))
 
 
@@ -1591,21 +1607,7 @@ def ivf_pq_topk(
             _nearest_cells(F.col(vec_col), cent_lits, n_probe)
         ).alias("cell"),
     )
-    scored = (
-        corpus_cells.join(F.broadcast(query_cells), on="cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos_sim", F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6)
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _rank_pairs(corpus_cells.join(F.broadcast(query_cells), on="cell"), k)
 
 
 def write_ivfpq_index(
@@ -1633,10 +1635,6 @@ def write_ivfpq_index(
     scan fusing cell assignment (raw vector) and encoding into the
     partitioned write. Queries go through :func:`ivfpq_topk_indexed`.
     """
-    import os
-
-    from ..committer import commit_json
-
     if centroids is None:
         centroids = _hash_sample_centroids(corpus, n_centroids, id_col, vec_col)
     if books is None:
@@ -1653,14 +1651,13 @@ def write_ivfpq_index(
             for j, bl in enumerate(_book_literals(books))
         ]
     ).cast(code_t)
-    cell = _nearest_cells(vec_d, _centroid_literals(centroids), 1)[0]
-    (
-        corpus.select(
-            F.col(id_col), codes.alias("pq_codes"), cell.alias("cell")
-        )
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
+    index = _ivfpq_index(path)
+    index.write(
+        {"": corpus.select(
+            F.col(id_col), codes.alias("pq_codes"),
+            _cell_of(F.col(vec_col), centroids).alias("cell"),
+        )},
+        "overwrite",
     )
     meta = {
         "centroids": centroids,
@@ -1670,19 +1667,19 @@ def write_ivfpq_index(
         "id_col": id_col,
         "vec_col": vec_col,
     }
-    commit_json(os.path.join(path, "_ivfpq_meta.json"), meta)
+    index.commit(meta)
     return meta
+
+
+def _ivfpq_index(path: str) -> BucketedIndex:
+    return BucketedIndex(
+        path, "_ivfpq_meta.json", "IVF-PQ index", "write_ivfpq_index",
+        part="cell", clustered=False,
+    )
 
 
 def read_ivfpq_meta(path: str) -> dict:
-    import os
-
-    from ..committer import load_json
-
-    meta, _ = load_json(os.path.join(path, "_ivfpq_meta.json"))
-    if meta is None:
-        raise FileNotFoundError(f"no IVF-PQ index at {path}")
-    return meta
+    return _ivfpq_index(path).load()[0]
 
 
 def ivfpq_topk_indexed(
@@ -1704,21 +1701,8 @@ def ivfpq_topk_indexed(
     at-rest scan cost: ~n_probe/n_centroids of an already-m/4D-sized
     store.
     """
-    meta = read_ivfpq_meta(path)
-    books = meta["books"]
-    cent_lits = _centroid_literals(meta["centroids"])
-    book_lits = _book_literals(books)
-
-    query_cells = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(
-            _nearest_cells(_to_double(F.col(vec_col)), cent_lits, n_probe)
-        ).alias("cell"),
-    )
-    probed = sorted(
-        r["cell"] for r in query_cells.select("cell").distinct().collect()
-    )
+    index = _ivfpq_index(path)
+    meta, _ = index.load()
     recon = F.flatten(
         F.array(
             *[
@@ -1726,34 +1710,15 @@ def ivfpq_topk_indexed(
                     bl,
                     F.element_at(F.col("pq_codes"), j + 1).cast("int") + 1,
                 )
-                for j, bl in enumerate(book_lits)
+                for j, bl in enumerate(_book_literals(meta["books"]))
             ]
         )
     )
-    corpus_cells = (
-        spark.read.parquet(path)
-        .filter(F.col("cell").isin(probed))
-        .select(
-            F.col(meta["id_col"]).alias("neighbor_id"),
-            recon.alias("c_vec"),
-            F.col("cell"),
-        )
+    pairs = _cell_candidates(
+        spark, index, meta["centroids"], queries, n_probe, id_col, vec_col,
+        F.col(meta["id_col"]).alias("neighbor_id"), recon.alias("c_vec"),
     )
-    scored = (
-        corpus_cells.join(F.broadcast(query_cells), on="cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos_sim", F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6)
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _rank_pairs(pairs, k)
 
 
 def pq_recall_curve(

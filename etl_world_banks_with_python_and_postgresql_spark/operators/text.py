@@ -20,6 +20,7 @@ from ..functions.exactnum import (
     ratio_scaled_halfup as _ratio_scaled,
 )
 from ..functions.xhash import POLY_BASE, POLY_MOD, md5_hash32, ws_tokens
+from ..sources.bucketed_index import BucketedIndex
 
 # Tiny stopword lexicons for the language-ID heuristic. Deliberately small so
 # the oracle SQL stays readable; real pipelines would swap in fastText or CLD3
@@ -737,31 +738,35 @@ def write_posting_index(
         on the sf0.1 index, readers auto-detect per file); pass
         ``compression='snappy'`` to trade bytes for codec speed.
     """
-    import os
-
-    from ..committer import commit_json
-
     toks = ws_tokens(F.col(text_col))
-    postings = _build_postings(df, toks, text_col, id_col, n_buckets, positional)
-    postings.write.mode("overwrite").option(
-        "compression", compression
-    ).partitionBy("bucket").parquet(path)
-    stats = df.agg(
+    index = _posting_index(path)
+    index.write(
+        {"": _build_postings(df, toks, text_col, id_col, n_buckets, positional)},
+        "overwrite", compression=compression,
+    )
+    index.commit({
+        **_posting_counts(df, text_col),
+        "n_buckets": n_buckets,
+        "positional": positional,
+        **({"positions_encoding": "delta"} if positional else {}),
+        "compression": compression,
+    })
+
+
+def _posting_index(path: str) -> BucketedIndex:
+    return BucketedIndex(
+        path, "_postings_stats.json", "posting index", "write_posting_index",
+        layout=("n_buckets", "positional"), clustered=False,
+    )
+
+
+def _posting_counts(df: DataFrame, text_col: str) -> dict:
+    """The sidecar's counting stats (n_docs, sum_dl) of ``df``."""
+    row = df.agg(
         F.count("*").alias("n_docs"),
         F.sum(token_count(F.col(text_col)).cast("long")).alias("sum_dl"),
     ).collect()[0]
-    # unguarded: a (re)build is a deliberate overwrite of the whole index
-    commit_json(
-        os.path.join(path, "_postings_stats.json"),
-        {
-            "n_docs": stats["n_docs"],
-            "sum_dl": stats["sum_dl"],
-            "n_buckets": n_buckets,
-            "positional": positional,
-            **({"positions_encoding": "delta"} if positional else {}),
-            "compression": compression,
-        },
-    )
+    return {"n_docs": int(row["n_docs"]), "sum_dl": int(row["sum_dl"] or 0)}
 
 
 def _gap_encode(positions):
@@ -826,30 +831,16 @@ def _build_postings(df, toks, text_col, id_col, n_buckets, positional,
 
 def _read_postings(spark, path: str, terms: list[str]) -> tuple[DataFrame, dict]:
     """Bucket-pruned posting read for a query term set + index stats."""
-    import os
-
-    from ..committer import load_json
-
-    stats, _tok = load_json(os.path.join(path, "_postings_stats.json"))
-    if stats is None:
-        raise FileNotFoundError(f"no posting index stats at {path}")
-    n_buckets = stats["n_buckets"]
-    # python-side xxhash is not available; prune via a literal IN over the
-    # bucket partition column computed FROM the term literals in-plan --
-    # Catalyst folds pmod(xxhash64(lit)) to a constant, so the scan's
-    # PartitionFilters carry the concrete bucket list
-    term_arr = F.array(*[F.lit(t) for t in terms])
-    buckets = (
-        spark.range(1)
-        .select(
-            F.explode(term_arr).alias("t")
-        )
-        .select(F.pmod(F.xxhash64("t"), F.lit(n_buckets)).alias("b"))
-        .collect()
-    )
-    bucket_ids = sorted({r["b"] for r in buckets})
-    pr = spark.read.parquet(path).where(
-        F.col("bucket").isin(bucket_ids) & F.col("term").isin(terms)
+    index = _posting_index(path)
+    stats, _ = index.load()
+    # python-side xxhash is not available: the term literals' buckets
+    # are computed in-plan (Catalyst folds pmod(xxhash64(lit)) to a
+    # constant), so one plain collect lists them
+    buckets = spark.range(1).select(
+        F.explode(F.array(*[F.lit(t) for t in terms])).alias("t")
+    ).select(F.pmod(F.xxhash64("t"), F.lit(stats["n_buckets"])).alias("b"))
+    pr = index.read(spark, sorted({r["b"] for r in buckets.collect()})).where(
+        F.col("term").isin(terms)
     )
     return pr, stats
 
@@ -953,54 +944,25 @@ def append_posting_index(
     append-only corpus growth; re-ingesting a doc_id double-counts it
     (dedup upstream, the same contract as append_ivf_index).
 
-    Concurrency: the postings land as uniquely-named parquet part files
-    BEFORE the stats commit, so two racing appenders' postings always
-    coexist; only the stats fold can race. Because the (n_docs, sum_dl)
-    delta COMMUTES (the same algebra as ``CdcAggView.ingest`` partials),
-    a lost CAS is recovered by reload-and-re-add: fold OUR delta into
-    the rival's committed stats and retry, bounded by ``cas_retries``.
-    Nothing is recomputed or re-appended on retry
-    (``committer.fold_stats``). If retries exhaust, the raise names the
-    hazard: the batch's postings are already on disk, so RE-RUNNING this
-    function would double-append -- rebuild with
-    :func:`write_posting_index` instead. A concurrent REBUILD
-    (n_buckets/positional changed under us) is a contract violation and
-    raises without retrying.
+    A lost stats CAS re-adds this batch's (n_docs, sum_dl) delta to the
+    rival's committed stats; if retries exhaust, the batch's postings are
+    already on disk, so RE-RUNNING this function would double-append --
+    rebuild with :func:`write_posting_index` instead.
     """
-    import os
-
-    from ..committer import fold_stats, load_json
-
-    stats_path = os.path.join(path, "_postings_stats.json")
-    stats, tok = load_json(stats_path)
-    if stats is None:
-        raise FileNotFoundError(
-            f"no posting index at {path}: build one with "
-            "write_posting_index before appending"
+    index = _posting_index(path)
+    with index.appending(cas_retries) as (stats, delta):
+        # appends must match the index's at-rest layout: a pre-r10 index
+        # (no positions_encoding key) stores sorted ABSOLUTE positions
+        toks = ws_tokens(F.col(text_col))
+        index.write(
+            {"": _build_postings(
+                df, toks, text_col, id_col, stats["n_buckets"],
+                stats.get("positional", False),
+                stats.get("positions_encoding", "absolute"),
+            )},
+            "append", compression=stats.get("compression", "snappy"),
         )
-    n_buckets = stats["n_buckets"]
-    positional = stats.get("positional", False)
-    # appends must match the index's at-rest layout: a pre-r10 index
-    # (no positions_encoding key) stores sorted ABSOLUTE positions
-    encoding = stats.get("positions_encoding", "absolute")
-    compression = stats.get("compression", "snappy")
-    toks = ws_tokens(F.col(text_col))
-    postings = _build_postings(
-        df, toks, text_col, id_col, n_buckets, positional, encoding
-    )
-    postings.write.mode("append").option(
-        "compression", compression
-    ).partitionBy("bucket").parquet(path)
-    batch = df.agg(
-        F.count("*").alias("n_docs"),
-        F.sum(token_count(F.col(text_col)).cast("long")).alias("sum_dl"),
-    ).collect()[0]
-    fold_stats(
-        stats_path, stats, tok,
-        {"n_docs": int(batch["n_docs"]), "sum_dl": int(batch["sum_dl"] or 0)},
-        layout=("n_buckets", "positional"),
-        retries=cas_retries, what="posting index",
-    )
+        delta.update(_posting_counts(df, text_col))
 
 
 def top_terms_per_doc(

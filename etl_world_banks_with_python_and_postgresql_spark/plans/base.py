@@ -148,6 +148,12 @@ def query(name: str, oracle: str | None = None, description: str = ""):
     return deco
 
 
+def _cache_path(sf_dir: str, kind: str) -> str:
+    import hashlib
+
+    return f"spark-warehouse/{kind}_{hashlib.sha1(sf_dir.encode()).hexdigest()[:10]}"
+
+
 def cached_index(sf_dir: str, kind: str, source_table: str, build) -> str:
     """Generic build-once / probe-many cache for probe-only registry
     entries (the z114/z115 split, generalized for VERDICT r10 #4): the
@@ -158,13 +164,11 @@ def cached_index(sf_dir: str, kind: str, source_table: str, build) -> str:
     ``build(path)`` runs only on miss; bench repeat>=2 min-of-N then
     reports the probe-only steady state -- the recurring 100 TB cost.
     """
-    import hashlib
     import os
 
     from ..committer import commit_json, load_json
 
-    h = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-    path = f"spark-warehouse/{kind}_{h}"
+    path = _cache_path(sf_dir, kind)
     st = os.stat(os.path.join(sf_dir, f"{source_table}.parquet"))
     fingerprint = [int(st.st_mtime_ns), st.st_size]
     marker, _ = load_json(os.path.join(path, "_z_cache.json"))

@@ -8,7 +8,10 @@ sorts REGISTRY by name. Helpers and SQL twins live in
 plans.base.
 """
 
+import shutil
+
 from .base import *  # noqa: F401,F403 -- registry, helpers, spark/operator imports
+from .base import _cache_path
 
 
 
@@ -477,53 +480,19 @@ def z03(spark, sf_dir):
 
 
 def _z_minhash_index_path(sf_dir: str) -> str:
-    import hashlib
-
-    h = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-    return f"spark-warehouse/minhash_index_{h}"
-
-
-def _z_minhash_build(spark, sf_dir: str, path: str) -> None:
-    """Build src0 + O(|batch|) append src1, then commit a completion
-    marker carrying a cheap content fingerprint of the source parquet
-    (mtime+size): a half-built index (crash between build and append)
-    or regenerated testdata can never be mistaken for a valid cache."""
-    import os
-    import shutil
-
-    from ..committer import commit_json
-
-    docs = load(spark, "documents", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    dedup.write_minhash_index(docs.filter(F.col("source") == "src0"), path)
-    dedup.append_minhash_index(docs.filter(F.col("source") == "src1"), path)
-    commit_json(
-        os.path.join(path, "_z_cache.json"),
-        {"sf_dir": sf_dir, "fingerprint": _z_docs_fingerprint(sf_dir)},
-    )
-
-
-def _z_docs_fingerprint(sf_dir: str) -> list:
-    import os
-
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    return [int(st.st_mtime_ns), st.st_size]
+    return _cache_path(sf_dir, "minhash_index")
 
 
 def _z_minhash_index_cached(spark, sf_dir: str) -> str:
-    import os
+    """src0 built, src1 appended O(|batch|); cached by
+    :func:`.base.cached_index` until documents.parquet changes."""
 
-    from ..committer import load_json
+    def build(path):
+        docs = load(spark, "documents", sf_dir)
+        dedup.write_minhash_index(docs.filter(F.col("source") == "src0"), path)
+        dedup.append_minhash_index(docs.filter(F.col("source") == "src1"), path)
 
-    path = _z_minhash_index_path(sf_dir)
-    marker, _ = load_json(os.path.join(path, "_z_cache.json"))
-    if (
-        marker is None
-        or marker.get("sf_dir") != sf_dir
-        or marker.get("fingerprint") != _z_docs_fingerprint(sf_dir)
-    ):
-        _z_minhash_build(spark, sf_dir, path)
-    return path
+    return cached_index(sf_dir, "minhash_index", "documents", build)
 
 
 @query(
@@ -541,8 +510,10 @@ def _z_minhash_index_cached(spark, sf_dir: str) -> str:
     ),
 )
 def z114(spark, sf_dir):
-    path = _z_minhash_index_path(sf_dir)
-    _z_minhash_build(spark, sf_dir, path)
+    # a build entry prices the build: drop the cache so cached_index
+    # rebuilds it, leaving a valid marker for z115's probe
+    shutil.rmtree(_z_minhash_index_path(sf_dir), ignore_errors=True)
+    path = _z_minhash_index_cached(spark, sf_dir)
     docs = load(spark, "documents", sf_dir)
     indexed = (
         spark.read.parquet(f"{path}/sets").select("doc_id").distinct()
@@ -2000,46 +1971,16 @@ def z148(spark, sf_dir):
     )
 
 
-def _z_winnow_index_path(sf_dir: str) -> str:
-    import hashlib
-
-    h = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-    return f"spark-warehouse/winnow_index_{h}"
-
-
-def _z_winnow_build(spark, sf_dir: str, path: str) -> None:
-    """Build src0 + O(|batch|) append src1, completion marker with a
-    content fingerprint (the _z_minhash_build protocol)."""
-    import os
-    import shutil
-
-    from ..committer import commit_json
+def _z_winnow_index_cached(spark, sf_dir: str) -> str:
+    """src0 built, src1 appended, cached like the minhash index."""
     from ..operators.dedup import append_winnow_index, write_winnow_index
 
-    docs = load(spark, "documents", sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    write_winnow_index(docs.filter(F.col("source") == "src0"), path)
-    append_winnow_index(docs.filter(F.col("source") == "src1"), path)
-    commit_json(
-        os.path.join(path, "_z_cache.json"),
-        {"sf_dir": sf_dir, "fingerprint": _z_docs_fingerprint(sf_dir)},
-    )
+    def build(path):
+        docs = load(spark, "documents", sf_dir)
+        write_winnow_index(docs.filter(F.col("source") == "src0"), path)
+        append_winnow_index(docs.filter(F.col("source") == "src1"), path)
 
-
-def _z_winnow_index_cached(spark, sf_dir: str) -> str:
-    import os
-
-    from ..committer import load_json
-
-    path = _z_winnow_index_path(sf_dir)
-    marker, _ = load_json(os.path.join(path, "_z_cache.json"))
-    if (
-        marker is None
-        or marker.get("sf_dir") != sf_dir
-        or marker.get("fingerprint") != _z_docs_fingerprint(sf_dir)
-    ):
-        _z_winnow_build(spark, sf_dir, path)
-    return path
+    return cached_index(sf_dir, "winnow_index", "documents", build)
 
 
 from ..operators.dedup import winnow_novel_oracle_sql as _winnow_novel_sql  # noqa: E402
@@ -2062,8 +2003,8 @@ from ..operators.dedup import winnow_novel_oracle_sql as _winnow_novel_sql  # no
     ),
 )
 def z151(spark, sf_dir):
-    path = _z_winnow_index_path(sf_dir)
-    _z_winnow_build(spark, sf_dir, path)
+    shutil.rmtree(_cache_path(sf_dir, "winnow_index"), ignore_errors=True)
+    path = _z_winnow_index_cached(spark, sf_dir)
     docs = load(spark, "documents", sf_dir)
     indexed = (
         spark.read.parquet(f"{path}/fps").select("doc_id").distinct()

@@ -239,6 +239,31 @@ def streaming_incremental_sink(
     return apply_batch
 
 
+def _novelty_sink(screen, probe, append):
+    """The novelty-sink skeleton, one ``foreachBatch`` body: skip an
+    empty batch, ``screen(batch)`` it for within-batch duplicates,
+    ``probe(spark, uniq)`` the survivors against what is already
+    ingested, ``append(novel)`` the remainder. Within-batch duplicates
+    resolve by keeping the lowest id (deterministic), and replayed epochs
+    are absorbed by CONTENT -- a replayed row finds its own earlier copy
+    -- so no epoch ledger is needed."""
+
+    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        append(probe(batch_df.sparkSession, screen(batch_df)))
+
+    return apply_batch
+
+
+def _keep_lowest(batch_df: DataFrame, pairs: DataFrame, a: str, b: str, id_col: str):
+    """``batch_df`` minus the higher id of every near-dup pair (a, b)."""
+    dup_ids = (
+        pairs.filter(F.col(a) < F.col(b)).select(F.col(b).alias(id_col)).distinct()
+    )
+    return batch_df.join(dup_ids, id_col, "left_anti")
+
+
 def streaming_novelty_sink(corpus_path: str, text_col: str = "text"):
     """foreachBatch body for continuous corpus ingestion with exact dedup:
     each micro-batch keeps only documents whose content is NOT already in
@@ -247,37 +272,32 @@ def streaming_novelty_sink(corpus_path: str, text_col: str = "text"):
     appends the novel remainder.
 
     The standard crawl-ingestion shape: the corpus only ever grows by
-    novel content, replays are absorbed (a replayed epoch's documents are
-    already in the corpus, so the appended delta is empty), and per-epoch
-    cost is O(|batch|) probe work against the corpus index -- bucket the
-    corpus by the content hash to keep the probe exchange-free on the
-    corpus side at scale. Returns a function for
-    ``writeStream.foreachBatch``.
+    novel content, and per-epoch cost is O(|batch|) probe work against
+    the corpus -- bucket the corpus by the content hash to keep the
+    probe exchange-free on the corpus side at scale. Returns a function
+    for ``writeStream.foreachBatch``.
     """
     import os
 
     from ..operators.dedup import novel_documents
 
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        # within-batch exact dedup first: keep the lowest doc_id per content
-        h = F.md5(F.col(text_col))
-        w_batch = W.partitionBy(h).orderBy("doc_id")
-        batch_uniq = (
+    def screen(batch_df):
+        w_batch = W.partitionBy(F.md5(F.col(text_col))).orderBy("doc_id")
+        return (
             batch_df.withColumn("_rn", F.row_number().over(w_batch))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        if os.path.exists(corpus_path):
-            corpus = spark.read.parquet(corpus_path)
-            novel = novel_documents(batch_uniq, corpus, text_col=text_col)
-        else:
-            novel = batch_uniq
-        novel.write.mode("append").parquet(corpus_path)
 
-    return apply_batch
+    def probe(spark, uniq):
+        if not os.path.exists(corpus_path):
+            return uniq
+        corpus = spark.read.parquet(corpus_path)
+        return novel_documents(uniq, corpus, text_col=text_col)
+
+    return _novelty_sink(
+        screen, probe, lambda novel: novel.write.mode("append").parquet(corpus_path)
+    )
 
 
 def streaming_semantic_novelty_sink(
@@ -294,69 +314,34 @@ def streaming_semantic_novelty_sink(
     the IVF probe, so only those cell partitions are read), then appends
     the novel remainder to the index via ``append_ivf_index``.
 
-    The SemDeDup counterpart of ``streaming_novelty_sink``: crawl batches
-    arrive, semantically-duplicate vectors are dropped against the
-    ever-growing index, and per-epoch cost is O(|batch| x probed-cells)
-    -- never a scan of the full index. Within-batch duplicates resolve by
-    keeping the lowest id (deterministic). Replayed epochs are absorbed:
-    a replayed vector finds its own earlier copy at cosine ~1 and is
+    The SemDeDup counterpart of ``streaming_novelty_sink``: per-epoch
+    cost is O(|batch| x probed-cells) -- never a scan of the full index.
+    A replayed vector finds its own earlier copy at cosine ~1 and is
     dropped. Requires the index to exist (seed it with
     ``write_ivf_index`` on the first corpus slice).
     """
     from ..operators.similarity import (
-        _centroid_literals,
-        _nearest_cells,
-        _to_double,
+        _ivf_novel_indexed,
         append_ivf_index,
-        cosine,
         cosine_neardup_pairs,
-        read_ivf_centroids,
     )
 
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        # within-batch semantic dedup: keep each near-dup cluster's min id
+    def screen(batch_df):
         pairs = cosine_neardup_pairs(
-            batch_df,
-            threshold=threshold,
-            id_col=id_col,
-            vec_col=vec_col,
+            batch_df, threshold=threshold, id_col=id_col, vec_col=vec_col,
             dim=None,
         )
-        dup_ids = pairs.filter(F.col("vec_a") < F.col("vec_b")).select(
-            F.col("vec_b").alias(id_col)
-        ).distinct()
-        batch_uniq = batch_df.join(dup_ids, id_col, "left_anti")
+        return _keep_lowest(batch_df, pairs, "vec_a", "vec_b", id_col)
 
-        cents = read_ivf_centroids(index_path)
-        cent_lits = _centroid_literals(cents)
-        probes = batch_uniq.select(
-            F.col(id_col).alias("_qid"),
-            F.col(vec_col).alias("_qv"),
-            F.explode(
-                _nearest_cells(_to_double(F.col(vec_col)), cent_lits, n_probe)
-            ).alias("cell"),
-        )
-        probed = sorted(
-            r["cell"] for r in probes.select("cell").distinct().collect()
-        )
-        idx = (
-            spark.read.parquet(index_path)
-            .filter(F.col("cell").isin(probed))
-            .select(F.col(vec_col).alias("_iv"), F.col("cell"))
-        )
-        hit_ids = (
-            idx.join(F.broadcast(probes), on="cell")
-            .filter(cosine(F.col("_qv"), F.col("_iv")) >= threshold)
-            .select(F.col("_qid").alias(id_col))
-            .distinct()
-        )
-        novel = batch_uniq.join(hit_ids, id_col, "left_anti")
-        append_ivf_index(novel, index_path, id_col=id_col, vec_col=vec_col)
-
-    return apply_batch
+    return _novelty_sink(
+        screen,
+        lambda spark, uniq: _ivf_novel_indexed(
+            spark, uniq, index_path, threshold, n_probe, id_col, vec_col
+        ),
+        lambda novel: append_ivf_index(
+            novel, index_path, id_col=id_col, vec_col=vec_col
+        ),
+    )
 
 
 def streaming_minhash_novelty_sink(
@@ -374,62 +359,40 @@ def streaming_minhash_novelty_sink(
     ``append_minhash_index`` -- O(|batch| x bands) per epoch, never an
     index scan.
 
-    The lexical member of the novelty-sink family (exact-hash
-    ``streaming_novelty_sink``, embedding
-    ``streaming_semantic_novelty_sink``). Within-batch near-dups resolve
-    by keeping the lowest id (deterministic). Replayed epochs are
-    absorbed by CONTENT: a replayed doc finds its own earlier copy at
-    Jaccard 1 (empty-shingle docs match each other too -- the verify
-    predicate treats 0/0 as satisfied) and is dropped, so no epoch
-    ledger is needed; only the n_docs observability stat can
-    double-count on replay. Seed the index with ``write_minhash_index``
-    on the first corpus slice.
+    ONE similarity definition for both screening stages (ADVICE r9):
+    within-batch screening uses the INDEX's shingle size and banding,
+    not minhash_lsh_pairs defaults. A replayed doc finds its own earlier
+    copy at Jaccard 1 (empty-shingle docs match each other too -- the
+    verify predicate treats 0/0 as satisfied); only the n_docs
+    observability stat can double-count on replay. Seed the index with
+    ``write_minhash_index`` on the first corpus slice.
     """
     from ..operators.dedup import (
+        _minhash_index,
         append_minhash_index,
         minhash_lsh_pairs,
         minhash_novel_indexed,
     )
 
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        # ONE similarity definition for both screening stages (ADVICE
-        # r9): within-batch screening must use the INDEX's shingle size
-        # and banding, not minhash_lsh_pairs defaults, or an index built
-        # with non-default params screens new-vs-new at a different
-        # recall curve than new-vs-indexed.
-        import os
-
-        from ..committer import load_json
-
-        stats, _ = load_json(os.path.join(index_path, "_minhash_stats.json"))
-        if stats is None:
-            raise FileNotFoundError(
-                f"no minhash index at {index_path}: seed it with "
-                "write_minhash_index before starting the stream"
-            )
+    def screen(batch_df):
+        stats, _ = _minhash_index(index_path).load()
         pairs = minhash_lsh_pairs(
             batch_df, threshold=threshold,
             n=stats["n"], k=stats["k"], band_size=stats["band_size"],
             text_col=text_col, id_col=id_col,
         )
-        dup_ids = (
-            pairs.filter(F.col("doc_a") < F.col("doc_b"))
-            .select(F.col("doc_b").alias(id_col))
-            .distinct()
-        )
-        batch_uniq = batch_df.join(dup_ids, id_col, "left_anti")
-        novel = minhash_novel_indexed(
-            spark, batch_uniq, index_path,
-            threshold=threshold, text_col=text_col, id_col=id_col,
-        )
-        append_minhash_index(
-            novel, index_path, text_col=text_col, id_col=id_col
-        )
+        return _keep_lowest(batch_df, pairs, "doc_a", "doc_b", id_col)
 
-    return apply_batch
+    return _novelty_sink(
+        screen,
+        lambda spark, uniq: minhash_novel_indexed(
+            spark, uniq, index_path,
+            threshold=threshold, text_col=text_col, id_col=id_col,
+        ),
+        lambda novel: append_minhash_index(
+            novel, index_path, text_col=text_col, id_col=id_col
+        ),
+    )
 
 
 def streaming_posting_index_sink(
@@ -673,60 +636,44 @@ def streaming_winnow_novelty_sink(
     """foreachBatch body for continuous document ingestion with
     WINNOWING-fingerprint near-dup screening against a
     :func:`operators.dedup.write_winnow_index` layout -- the locality-
-    preserving member of the novelty-sink family (exact-hash / minhash /
-    semantic siblings). Each micro-batch: in-batch dedup first (same
-    fingerprint definition as the index -- its k/window are read from
-    the stats sidecar, the ADVICE-r9 one-similarity rule), then the
-    pruned index probe keeps docs sharing < ``min_shared`` fingerprints
-    with every indexed doc, then the novel remainder appends O(|batch|).
+    preserving member of the novelty-sink family. In-batch dedup uses
+    the index's fingerprint definition (k/window from its sidecar, the
+    ADVICE-r9 one-similarity rule); the pruned index probe keeps docs
+    sharing < ``min_shared`` fingerprints with every indexed doc.
 
-    Replay absorption is by CONTENT: a replayed doc re-finds its own
-    earlier copy (identical fingerprint set) and is dropped -- except
-    docs too short to carry ``min_shared`` fingerprints, which re-append
-    as dead-storage duplicates (probe-safe: the probe counts DISTINCT
-    fingerprints and doc ids); compact by rebuilding. Seed with
+    Replays are absorbed, except docs too short to carry ``min_shared``
+    fingerprints, which re-append as dead-storage duplicates
+    (probe-safe: the probe counts DISTINCT fingerprints and doc ids);
+    ``compact_winnow_index`` removes them. Seed with
     ``write_winnow_index`` on the first corpus slice.
     """
-    import os
-
-    from ..committer import load_json
     from ..operators.dedup import (
+        _winnow_index,
         append_winnow_index,
         winnow_novel_indexed,
         winnow_pairs,
     )
 
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        stats, _ = load_json(os.path.join(index_path, "_winnow_stats.json"))
-        if stats is None:
-            raise FileNotFoundError(
-                f"no winnow index at {index_path}: seed it with "
-                "write_winnow_index before starting the stream"
-            )
+    def screen(batch_df):
+        stats, _ = _winnow_index(index_path).load()
         pairs = winnow_pairs(
             batch_df, k=stats["k"], window=stats["window"],
             max_df=max_df, min_shared=min_shared,
             text_col=text_col, id_col=id_col,
         )
-        dup_ids = (
-            pairs.filter(F.col("doc_a") < F.col("doc_b"))
-            .select(F.col("doc_b").alias(id_col))
-            .distinct()
-        )
-        batch_uniq = batch_df.join(dup_ids, id_col, "left_anti")
-        novel = winnow_novel_indexed(
-            spark, batch_uniq, index_path,
+        return _keep_lowest(batch_df, pairs, "doc_a", "doc_b", id_col)
+
+    return _novelty_sink(
+        screen,
+        lambda spark, uniq: winnow_novel_indexed(
+            spark, uniq, index_path,
             min_shared=min_shared, max_df=max_df,
             text_col=text_col, id_col=id_col,
-        )
-        append_winnow_index(
+        ),
+        lambda novel: append_winnow_index(
             novel, index_path, text_col=text_col, id_col=id_col
-        )
-
-    return apply_batch
+        ),
+    )
 
 
 def streaming_drift_monitor_sink(

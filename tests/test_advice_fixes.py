@@ -404,6 +404,132 @@ def test_append_blocks_while_compaction_holds_exclusive(spark, tmp_path):
     t.join()
 
 
+def _mini_vectors(spark, ids, dim=8):
+    return spark.createDataFrame(
+        [(i, [1.0 if j == i % dim else 0.1 for j in range(dim)]) for i in ids],
+        "vec_id long, embedding array<float>",
+    )
+
+
+def _blocked_on_flock(done, timeout=120):
+    """Wait until a thread of this process queues on an flock (Linux
+    /proc/locks marks a blocked waiter ``->``) or ``done`` is set;
+    True means blocked. Deterministic where a fixed sleep races the
+    operation's own run time."""
+    import os
+    import re
+    import time
+
+    waiter = re.compile(rf"->\s+FLOCK\s+\S+\s+\S+\s+{os.getpid()}\s")
+    deadline = time.monotonic() + timeout
+    while not done.is_set() and time.monotonic() < deadline:
+        with open("/proc/locks") as f:
+            if waiter.search(f.read()):
+                return True
+        time.sleep(0.05)
+    return False
+
+
+def test_rebuild_ivf_index_blocks_on_appender_lock(spark, tmp_path):
+    """The IVF twin of the minhash compaction lock: a rebuild swaps the
+    whole index root, so while an appender holds the SHARED maintenance
+    lock rebuild_ivf_index must not start its read."""
+    import threading
+
+    from etl_world_banks_with_python_and_postgresql_spark.committer import (
+        maintenance_lock,
+    )
+    from etl_world_banks_with_python_and_postgresql_spark.operators.similarity import (
+        rebuild_ivf_index,
+        write_ivf_index,
+    )
+
+    path = str(tmp_path / "ivf")
+    write_ivf_index(_mini_vectors(spark, range(6)), path, n_centroids=2)
+    done = threading.Event()
+    result = {}
+
+    def rebuild():
+        result["cents"] = rebuild_ivf_index(spark, path, n_centroids=3)
+        done.set()
+
+    with maintenance_lock(path, exclusive=False):
+        t = threading.Thread(target=rebuild, daemon=True)
+        t.start()
+        assert _blocked_on_flock(done), (
+            "IVF rebuild proceeded while an appender held the shared "
+            "maintenance lock"
+        )
+    assert done.wait(120), "rebuild never completed after lock release"
+    t.join()
+    assert len(result["cents"]) == 3
+    assert spark.read.parquet(path).count() == 6
+
+
+def test_ivf_append_blocks_while_rebuild_holds_exclusive(spark, tmp_path):
+    """An IVF append arriving mid-rebuild waits instead of landing part
+    files in the root the rebuild is about to swap away."""
+    import threading
+
+    from etl_world_banks_with_python_and_postgresql_spark.committer import (
+        maintenance_lock,
+    )
+    from etl_world_banks_with_python_and_postgresql_spark.operators.similarity import (
+        append_ivf_index,
+        write_ivf_index,
+    )
+
+    path = str(tmp_path / "ivf")
+    write_ivf_index(_mini_vectors(spark, range(4)), path, n_centroids=2)
+    done = threading.Event()
+
+    def append():
+        append_ivf_index(_mini_vectors(spark, range(4, 6)), path)
+        done.set()
+
+    with maintenance_lock(path, exclusive=True):
+        t = threading.Thread(target=append, daemon=True)
+        t.start()
+        assert _blocked_on_flock(done), (
+            "IVF append proceeded while a rebuild held the exclusive lock"
+        )
+    assert done.wait(120), "append never completed after lock release"
+    t.join()
+    assert spark.read.parquet(path).count() == 6
+
+
+def test_winnow_probe_releases_caches(spark, tmp_path):
+    """winnow_novel_indexed leaves no persisted frame behind: a
+    streaming sink probes once per epoch, so one cached block per call
+    would grow without bound in a long-lived session."""
+    from etl_world_banks_with_python_and_postgresql_spark.operators.dedup import (
+        winnow_novel_indexed,
+        write_winnow_index,
+    )
+
+    path = str(tmp_path / "idx")
+    write_winnow_index(
+        _mini_docs(
+            spark, [f"alpha beta gamma delta epsilon zeta eta theta {i}" for i in range(4)]
+        ),
+        path,
+    )
+    spark.catalog.clearCache()
+    base = _persisted_rdd_count(spark)
+    # doc 0 shares 8 tokens with the index (a winnowing guarantee at
+    # k=3, window=4); doc 1 is too short to carry a fingerprint
+    batches = [
+        _mini_docs(spark, [
+            f"alpha beta gamma delta epsilon zeta eta theta iota {i}",
+            f"new {i} words",
+        ])
+        for i in range(3)
+    ]
+    results = [winnow_novel_indexed(spark, b, path, min_shared=1) for b in batches]
+    assert _persisted_rdd_count(spark) == base
+    assert [sorted(r["doc_id"] for r in df.collect()) for df in results] == [[1]] * 3
+
+
 def test_compact_then_read_is_consistent(spark, tmp_path):
     """The example-crash shape (ADVICE r9 high): reads issued AFTER
     compaction must see the full deduped index; compaction refreshes

@@ -1018,3 +1018,136 @@ def test_only_committer_renames():
         if rel != "committer.py":
             visit(ast.parse(f.read_text()), rel, None)
     assert not found, f"rename outside committer.py: {found}"
+
+
+def test_only_bucketed_index_runs_the_index_protocol():
+    """The maintenance lock and the stats CAS fold belong to the one
+    at-rest index protocol: no package module other than
+    sources/bucketed_index.py may import or call ``maintenance_lock`` or
+    ``fold_stats`` (committer.py defines them), so a new index family
+    cannot hand-roll its own append/compact copy."""
+    import ast
+    import pathlib
+
+    import etl_world_banks_with_python_and_postgresql_spark as pkg
+
+    protocol = {"maintenance_lock", "fold_stats"}
+    root = pathlib.Path(pkg.__file__).parent
+    found = []
+    for f in sorted(root.rglob("*.py")):
+        rel = f.relative_to(root).as_posix()
+        if rel in ("committer.py", "sources/bucketed_index.py"):
+            continue
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.ImportFrom):
+                names = {a.name for a in node.names} & protocol
+            elif isinstance(node, ast.Call):
+                fn = node.func
+                names = {getattr(fn, "id", None), getattr(fn, "attr", None)} & protocol
+            else:
+                continue
+            found += [f"{rel}:{node.lineno} {n}" for n in sorted(names)]
+    assert not found, f"index protocol outside bucketed_index.py: {found}"
+
+
+# ------------------------------ index maintenance crashes: probes and appends
+
+
+def _near_dup_docs(spark):
+    """(seed, probe) docs: the probe holds near-copies of seed docs plus
+    unrelated text, so a probe answer is a non-trivial id set."""
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(60)]
+    texts = [" ".join(rng.choice(vocab) for _ in range(12)) for _ in range(12)]
+    schema = "doc_id int, text string"
+    seed = spark.createDataFrame(list(enumerate(texts)), schema)
+    probe = spark.createDataFrame(
+        [(100 + i, texts[i] + " tail") for i in (1, 5, 9)]
+        + [(200, " ".join(vocab[:12])), (201, " ".join(vocab[-12:]))],
+        schema,
+    )
+    return seed, probe
+
+
+def _vectors(spark, ids, dim=8):
+    return spark.createDataFrame(
+        [(i, [1.0 if j == i % dim else 0.1 * (i % 3) for j in range(dim)]) for i in ids],
+        "vec_id long, embedding array<float>",
+    )
+
+
+def _index_family(spark, family, path):
+    """(directory the maintenance swaps, maintain(), probe() answers)."""
+    from etl_world_banks_with_python_and_postgresql_spark.operators import (
+        dedup,
+        similarity,
+    )
+
+    if family == "ivf":
+        similarity.write_ivf_index(_vectors(spark, range(12)), path, n_centroids=3)
+        queries = _vectors(spark, range(100, 104))
+        return (
+            path,
+            lambda: similarity.rebuild_ivf_index(spark, path, n_centroids=2),
+            lambda: sorted(map(tuple, similarity.ivf_topk_indexed(
+                spark, path, queries, n_probe=2, k=3
+            ).collect())),
+        )
+    seed, probe = _near_dup_docs(spark)
+    if family == "minhash":
+        dedup.write_minhash_index(seed, path, n_buckets=4)
+        return (
+            os.path.join(path, "sets"),
+            lambda: dedup.compact_minhash_index(spark, path),
+            lambda: sorted(r["doc_id"] for r in dedup.minhash_novel_indexed(
+                spark, probe, path
+            ).collect()),
+        )
+    dedup.write_winnow_index(seed, path, n_buckets=4)
+    return (
+        os.path.join(path, "fps"),
+        lambda: dedup.compact_winnow_index(spark, path),
+        lambda: sorted(r["doc_id"] for r in dedup.winnow_novel_indexed(
+            spark, probe, path, min_shared=1
+        ).collect()),
+    )
+
+
+@pytest.mark.parametrize("family", ["ivf", "minhash", "winnow"])
+def test_probe_serves_committed_index_after_swap_crash(
+    spark, tmp_path, monkeypatch, family
+):
+    """A rebuild or compaction that crashes between its two renames
+    leaves only ``.old``; every probe still answers from it, exactly as
+    before the crash."""
+    swapped, maintain, probe = _index_family(spark, family, str(tmp_path / "idx"))
+    before = probe()
+    assert before
+    fired = _crash_swap_at(monkeypatch, swapped, "rename_in")
+    with pytest.raises(OSError, match="injected"):
+        maintain()
+    assert fired and not os.path.exists(swapped)
+    assert probe() == before
+
+
+def test_ivf_rebuild_crash_then_append_keeps_every_vector(
+    spark, tmp_path, monkeypatch
+):
+    """The append after a rebuild crashed between its renames takes the
+    maintenance lock while the index root is missing: the lock must not
+    re-create the root (restore_dir would then drop ``.old``, the whole
+    index), so the append restores it and every vector survives."""
+    from etl_world_banks_with_python_and_postgresql_spark.operators import similarity
+
+    path = str(tmp_path / "ivf")
+    similarity.write_ivf_index(_vectors(spark, range(10)), path, n_centroids=3)
+    fired = _crash_swap_at(monkeypatch, path, "rename_in")
+    with pytest.raises(OSError, match="injected"):
+        similarity.rebuild_ivf_index(spark, path, n_centroids=2)
+    assert fired and not os.path.exists(path)
+    similarity.append_ivf_index(_vectors(spark, range(10, 13)), path)
+    ids = sorted(r["vec_id"] for r in spark.read.parquet(path).collect())
+    assert ids == list(range(13))
+    assert not os.path.exists(path + ".old")
